@@ -16,13 +16,14 @@ Operator ids (F*/A*/W*/U*/J*/X*/D*/S*/K*) reference SURVEY.md §2.
 
 from __future__ import annotations
 
+import os
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from geoharvest_spark import index as ix  # noqa: E402
 from geoharvest_spark import geo as _geo  # noqa: E402
@@ -336,27 +337,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     Q["a2_error_rollup"] = a2_error_rollup
 
     def a4_last_event_per_key(spark, sf):  # A4: last-event-wins dedupe
-        # r8: the row_number window shuffled and sorted EVERY event; the
-        # winner per user is a plain max over (ts, event_id) packed into one
-        # long (event_id < 2^32 by construction; epoch*2^32 + id < 2^63), so
-        # a hash aggregate with map-side combine ships one row per user and
-        # a join-back restores event_type (AQE broadcasts the tiny winner
-        # side at runtime). Same rows, same order (1.21 -> 0.93 s at sf1.0).
+        # a window, not a packed max(seconds * 2^32 + event_id) key: the
+        # packing truncates ts to whole seconds (wrong winner on sub-second
+        # ties), overflows on far-future ts, and is no faster on 4 cores
+        from geoharvest_spark.functions import latest_per_key
+
         ev = _t(spark, sf, "events")
-        packed = (
-            F.col("ts").cast("timestamp").cast("long") * F.lit(4294967296)
-            + F.col("event_id")
-        )
-        win = (
-            ev.groupBy("user_id")
-            .agg(F.max(packed).alias("_pk"))
-            .select(
-                "user_id",
-                F.pmod(F.col("_pk"), F.lit(4294967296)).alias("event_id"),
-            )
-        )
         return (
-            ev.join(win, ["user_id", "event_id"], "inner")
+            latest_per_key(
+                ev, ["user_id"], [F.col("ts").desc(), F.col("event_id").desc()]
+            )
             .select("user_id", "event_id", "event_type")
             .orderBy("user_id")
         )
@@ -502,14 +492,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         polys = _nation_boxes(spark, sf)
         # nation boxes tile the WHOLE world: the cover-cell prefilter can
         # prune nothing and is pure fixed overhead here (r8: measured
-        # +0.2-0.5 s) — disabled for this query only. The Arrow refine is
-        # pinned explicitly (it is also the library default): 25 distinct
-        # 5-point rectangles batch perfectly in the Arrow kernel while
-        # the 10-term codegen unroll pays 2x padding per row (interleaved
-        # min-of-3: 3.3 vs 2.5 s at sf1.0; both paths bit-identical).
+        # +0.2-0.5 s) — disabled for this query only.
         out = pip_join(
-            pts, polys, res=4, rows_per_task=5000, cell_prefilter=False,
-            codegen_refine=False,
+            pts, polys, res=4, rows_per_task=5000, cell_prefilter=False
         )
         return (
             out.groupBy("poly_id")
@@ -2235,6 +2220,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         from geoharvest_spark.streaming import (
             EVENT_STREAM_SCHEMA,
+            last_event_per_url_batch,
             last_event_stateful,
             split_invalid,
             synth_event_batch,
@@ -2267,15 +2253,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         q.stop()
         # per-epoch updates are running maxima per url, so the max update
         # per url IS the final state (batch-order independent)
-        w = Window.partitionBy("url").orderBy(
-            F.col("seq").desc(),
-            F.col("event_ts").desc(),
-            F.col("message_id").desc(),
-        )
         return (
-            spark.table(sink)
-            .withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
+            last_event_per_url_batch(spark.table(sink))
             .select(
                 "url",
                 "seq",

@@ -1,8 +1,8 @@
 """geoharvest_spark — a from-scratch PySpark-native spatial-join + tiling engine.
 
 Re-expresses the query/data-processing capabilities of the reference
-(MITLibraries/geo-harvester, surveyed in /root/repo/SURVEY.md) as idiomatic
-Spark DataFrame/SQL dataflow over a Common-Crawl-style web-pages table
+(MITLibraries/geo-harvester, surveyed in the repository's SURVEY.md) as
+idiomatic Spark DataFrame/SQL dataflow over a Common-Crawl-style web-pages table
 (url, warc_ts, html, text, lang), extended with H3-style/S2 cell indexing,
 point-in-polygon joins, kNN, and raster<->vector tiling.
 

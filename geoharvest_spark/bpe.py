@@ -157,11 +157,17 @@ def trained_consistent(merges: Iterable[tuple[str, str]]) -> bool:
     """True iff every merge's parts are buildable by strictly earlier
     merges (single chars are always buildable) — the training invariant
     under which the replace-chain and the classic lowest-rank-first
-    loop provably agree (r6). O(#merges), driver-side."""
+    loop provably agree (r6). A repeated pair is inconsistent too: the
+    rank dict keeps its last rank while the chain applies its first.
+    O(#merges), driver-side."""
     made: set[str] = set()
+    seen: set[tuple[str, str]] = set()
     for a, b in merges:
         if (len(a) > 1 and a not in made) or (len(b) > 1 and b not in made):
             return False
+        if (a, b) in seen:
+            return False
+        seen.add((a, b))
         made.add(a + b)
     return True
 

@@ -27,6 +27,7 @@ import urllib.parse
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .functions import latest_per_key
 from .schema import CHECKPOINT_SCHEMA
 
 
@@ -49,18 +50,10 @@ class CheckpointStore:
 
     def current(self) -> DataFrame:
         """Latest status per (job_id, snapshot_id, partition_id) —
-        last-event-wins window dedupe (A4 semantics, mit.py:186-197)."""
-        from pyspark.sql import Window
-
-        w = (
-            Window.partitionBy("job_id", "snapshot_id", "partition_id")
-            .orderBy(F.col("updated_ts").desc())
-        )
-        return (
-            self.log()
-            .withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .drop("_rn")
+        last-event-wins (A4 semantics, mit.py:186-197)."""
+        return latest_per_key(
+            self.log(), ["job_id", "snapshot_id", "partition_id"],
+            [F.col("updated_ts").desc()],
         )
 
     def completed_partitions(self, job_id: str, snapshot_id: str) -> DataFrame:

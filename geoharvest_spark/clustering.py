@@ -217,7 +217,8 @@ def dbscan(
         cedges, vertices=lbl.select("l"), max_iter=max_iter
     )
     # back-substitute: cluster(u) = component(l(u)); isolated cores
-    # (no core neighbor) have l(u) = u and component u from `vertices`
+    # (no core neighbor) have no `lbl` row, so both left joins leave them
+    # null and coalesce(component, id) makes them their own cluster
     comp = (
         core.join(lbl, "id", "left")
         .join(

@@ -9,7 +9,7 @@ behaviors are not expressible bit-exactly in Catalyst.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -85,6 +85,19 @@ def remove_suffix(c: Column, suffix: str) -> Column:
     import re as _re
 
     return F.regexp_replace(c, _re.escape(suffix) + "$", "")
+
+
+def latest_per_key(df: DataFrame, keys: list[str], order: list[Column]) -> DataFrame:
+    """A4 last-event-wins (mit.py:186-197): the first row per ``keys``
+    under ``order`` — rank 1 of a row_number() window, no helper columns.
+    The order columns compare at full precision, so sub-second events and
+    far-future timestamps rank correctly."""
+    w = Window.partitionBy(*keys).orderBy(*order)
+    return (
+        df.withColumn("_rn", F.row_number().over(w))
+        .where(F.col("_rn") == 1)
+        .drop("_rn")
+    )
 
 
 # ---------------------------------------------------------------------------

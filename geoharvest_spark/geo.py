@@ -35,14 +35,6 @@ except Exception:  # pragma: no cover
 
 EARTH_RADIUS_M = 6371008.8  # mean Earth radius (IUGG)
 
-_ENVELOPE_RE = re.compile(
-    r"^ENVELOPE\(\s*(-?\d+(?:\.\d+)?)\s*,\s*(-?\d+(?:\.\d+)?)\s*,"
-    r"\s*(-?\d+(?:\.\d+)?)\s*,\s*(-?\d+(?:\.\d+)?)\s*\)$"
-)
-_POINT_RE = re.compile(
-    r"^POINT\(\s*(-?\d+(?:\.\d+)?)\s+(-?\d+(?:\.\d+)?)\s*\)$"
-)
-
 
 # ---------------------------------------------------------------------------
 # Column-expression builders (pure Catalyst; no Python at runtime)
@@ -104,16 +96,6 @@ def geometry_centroid(bbox: Column) -> Column:
     )
 
 
-def union_envelope_agg(w: Column, e: Column, n: Column, s: Column) -> list[Column]:
-    """Across-rows union envelope: min(w), max(e), max(n), min(s).
-
-    Matches the reference per-record union over multiple <bounding> boxes
-    (fgdc.py:110-122) lifted to a groupBy aggregate. Returns the 4 agg
-    Columns (caller aliases them).
-    """
-    return [F.min(w), F.max(e), F.max(n), F.min(s)]
-
-
 def haversine_m(lon1: Column, lat1: Column, lon2: Column, lat2: Column) -> Column:
     """Great-circle distance in meters as a native Column expression.
 
@@ -155,18 +137,6 @@ def validated_envelope_wkt(col: Column) -> Column:
 # ---------------------------------------------------------------------------
 # numpy kernels (for Arrow-batched refine stages)
 # ---------------------------------------------------------------------------
-def parse_envelope_np(values: "np.ndarray") -> np.ndarray:
-    """Vector parse of ENVELOPE strings -> (n,4) float array, NaN rows invalid."""
-    out = np.full((len(values), 4), np.nan)
-    for i, v in enumerate(values):
-        if not v:
-            continue
-        m = _ENVELOPE_RE.match(v)
-        if m:
-            out[i] = [float(m.group(j)) for j in range(1, 5)]
-    return out
-
-
 def parse_polygon_wkt(wkt: str) -> list[np.ndarray]:
     """POLYGON/MULTIPOLYGON WKT -> list of (n,2) exterior-ring arrays.
 

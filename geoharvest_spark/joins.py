@@ -154,122 +154,6 @@ def _refine_pip(joined: DataFrame) -> DataFrame:
     )
 
 
-# max ring points (incl. the closing repeat) the unrolled codegen refine
-# handles; bigger rings fall back to the Arrow kernel. 10 keeps the whole
-# unrolled crossing expression inside HotSpot's ~8 KB per-method JIT limit
-# for the WHOLE WSCG stage (join + filter fuse into one generated
-# method): measured cliff at 11 terms on a plain cached scan (0.9 s at
-# 10 -> 13 s at 11 for 10.8M rows — the classic huge-method
-# de-optimization; a 24-term F.get variant sat at 22 s), which is also
-# why the edges are pre-padded flat columns with no per-row index/null
-# logic at all.
-_PIP_CODEGEN_MAX_V = 10
-
-
-def _pip_ring_txt(wkt: "F.Column") -> "F.Column":
-    # first '((...' group — the exterior ring, holes dropped: the same
-    # ring parse_polygon_wkt's regex yields on single-'((' WKT
-    return F.regexp_extract(wkt, r"\(\(([^()]+)\)", 1)
-
-
-def _pip_edge_cols(wkt: "F.Column") -> "dict[str, F.Column]":
-    """Flat padded per-edge coordinate columns of the exterior ring —
-    computed on the POLYGON side (pre-explode), so the parse runs once
-    per polygon and the candidate shuffle carries plain doubles instead
-    of WKT text. Edge j < n is (v_j -> v_{(j+1) mod n}) exactly as
-    np.roll builds it; edges j >= n pad with (0,0)->(0,0), a degenerate
-    horizontal edge whose crossing test is always false (contributes
-    nothing, and the division branch never runs for it). String->double
-    casts are correctly-rounded in both engines, so the coordinates are
-    bit-identical to the Python float() parse."""
-    pts = F.split(_pip_ring_txt(wkt), ",")
-    n = F.size(pts)
-
-    def coord(idx: "F.Column", which: int) -> "F.Column":
-        return F.get(F.split(F.trim(F.get(pts, idx)), r"\s+"), which).cast(
-            "double"
-        )
-
-    cols: dict[str, F.Column] = {}
-
-    def nn(c: "F.Column") -> "F.Column":
-        # coalesce with a literal makes the column NON-NULLABLE: the
-        # unrolled refine then reads plain doubles with zero null-
-        # tracking bytecode, keeping the WSCG stage comfortably under
-        # the JIT huge-method cliff (the gate guarantees the value
-        # branch never actually yields null)
-        return F.coalesce(c, F.lit(0.0))
-
-    for j in range(_PIP_CODEGEN_MAX_V):
-        in_ring = F.lit(j) < n
-        jn = F.when(F.lit(j + 1) < n, F.lit(j + 1)).otherwise(F.lit(0))
-        cols[f"_pe{j}x1"] = nn(F.when(in_ring, coord(F.lit(j), 0)))
-        cols[f"_pe{j}y1"] = nn(F.when(in_ring, coord(F.lit(j), 1)))
-        cols[f"_pe{j}x2"] = nn(F.when(in_ring, coord(jn, 0)))
-        cols[f"_pe{j}y2"] = nn(F.when(in_ring, coord(jn, 1)))
-    return cols
-
-
-def _pip_all_simple(polygons: DataFrame) -> bool:
-    """ONE tiny aggregate job over the polygon dim: True iff every WKT is
-    a single ring of 2..MAX_V parseable points — the shapes the unrolled
-    codegen refine handles. Linear scan, one-row result (same cost class
-    as the existing salt census); multi-ring / oversized / malformed
-    sets keep the Arrow refine for everything."""
-    ring = _pip_ring_txt(F.col("wkt"))
-    pts = F.split(ring, ",")
-    # token parse check via try_cast (never errors, unlike ANSI cast)
-    xs_ok = F.forall(
-        pts,
-        lambda p: F.get(F.split(F.trim(p), r"\s+"), 0)
-        .try_cast("double")
-        .isNotNull()
-        & F.get(F.split(F.trim(p), r"\s+"), 1)
-        .try_cast("double")
-        .isNotNull(),
-    )
-    simple = (
-        (F.regexp_count(F.col("wkt"), F.lit(r"\(\(")) == 1)
-        & (ring != "")
-        & (F.size(pts) >= 2)
-        & (F.size(pts) <= _PIP_CODEGEN_MAX_V)
-        & xs_ok
-    )
-    row = polygons.agg(
-        F.sum(F.when(simple, 0).otherwise(1)).alias("n_complex")
-    ).first()
-    return (row["n_complex"] or 0) == 0
-
-
-def _refine_pip_codegen(joined: DataFrame) -> DataFrame:
-    """Exact PIP refine as a fully-codegen unrolled even-odd ray cast —
-    no Python boundary at all (guide §4: the Arrow round trip alone cost
-    ~2.7 s per 10.8M candidates; ~1.3 s of that was shipping WKT text).
-
-    Bit-identical to points_in_ring: per edge j the crossing test is
-    ``(y1 > y) != (y2 > y)`` and the hit test ``x < (x2-x1)*(y-y1)/
-    (y2-y1) + x1`` — the same IEEE operand order, and the division is
-    NESTED inside the crossing branch (CaseWhen evaluates branches
-    lazily), which both mirrors the numpy masking semantics and avoids
-    ANSI mode's divide-by-zero error: crossing=true implies y1 != y2
-    exactly. Padded edges are degenerate horizontal segments — their
-    crossing test is constant-false, same as np.roll's closing-repeat
-    edge on closed rings."""
-    x, y = F.col("lon"), F.col("lat")
-    total = F.lit(0)
-    drop = []
-    for j in range(_PIP_CODEGEN_MAX_V):
-        x1, y1 = F.col(f"_pe{j}x1"), F.col(f"_pe{j}y1")
-        x2, y2 = F.col(f"_pe{j}x2"), F.col(f"_pe{j}y2")
-        drop += [f"_pe{j}x1", f"_pe{j}y1", f"_pe{j}x2", f"_pe{j}y2"]
-        crosses = (y1 > y) != (y2 > y)
-        xint = (x2 - x1) * (y - y1) / (y2 - y1) + x1
-        total = total + F.when(
-            crosses, F.when(x < xint, 1).otherwise(0)
-        ).otherwise(0)
-    return joined.where(total % 2 == 1).drop(*drop)
-
-
 def pip_join(
     points: DataFrame,
     polygons: DataFrame,
@@ -279,7 +163,6 @@ def pip_join(
     salted: bool = True,
     census_sample: float | None = None,
     cell_prefilter: bool = True,
-    codegen_refine: bool | None = False,
 ) -> DataFrame:
     """Point-in-polygon join -> (point columns..., poly_id).
 
@@ -298,40 +181,9 @@ def pip_join(
     # the points anyway, so the extra exchange is pure cost (guide §2.4)
     pts = points.withColumn("cell", ix.ghcell(F.col("lon"), F.col("lat"), res))
 
-    # refine-path choice (guide §4): codegen_refine=True (or None = auto-
-    # detect with one tiny polygon-dim aggregate) runs the exact ray cast
-    # as an unrolled whole-stage-codegen expression when every polygon is
-    # a single ring of <= _PIP_CODEGEN_MAX_V parseable points — no Python
-    # boundary, numeric ring columns instead of WKT text in the shuffle.
-    # Both paths are bit-identical (same IEEE operand order), so the
-    # choice never changes results. DEFAULT IS THE ARROW KERNEL (r8
-    # negative result): the codegen stage sits near HotSpot's huge-method
-    # JIT cliff, and under a benchmark-shaped workload mix the generated
-    # class is evicted from the ~100-entry codegen cache between
-    # invocations, so every run re-pays an interpreted warm-up (measured:
-    # 3.6 s warm vs 11.4 s first-run; alternating-cycle bench min landed
-    # ~5.5 s vs 4.4-4.8 s Arrow, while an isolated interleaved A/B showed
-    # codegen 3.65 <= arrow 3.82). Opt in per workload where the plan
-    # stays resident.
-    use_codegen = (
-        _pip_all_simple(polygons) if codegen_refine is None else codegen_refine
+    cover = polygon_cover_cells(polygons, res).select(
+        "cell", "poly_id", "wkt", "bbox"
     )
-    if use_codegen:
-        edge_cols = _pip_edge_cols(F.col("wkt"))
-        polygons = polygons.withColumns(edge_cols)
-        cover_cols = ["cell", "poly_id", *edge_cols, "bbox"]
-        # CACHE the cover as a pushdown barrier: predicate pushdown
-        # substitutes projection aliases into the join condition
-        # REGARDLESS of cost (CLAUDE.md r8 note), so without the barrier
-        # the per-edge WKT string parse re-runs per CANDIDATE pair
-        # (measured 22 s vs ~4 s at 12M candidates — the inline-split
-        # trap). The cache materializes the parsed doubles once per
-        # cover row; ~flat-double row width, spills to disk at scale.
-        cover = polygon_cover_cells(polygons, res).select(*cover_cols).cache()
-    else:
-        cover = polygon_cover_cells(polygons, res).select(
-            "cell", "poly_id", "wkt", "bbox"
-        )
 
     # pre-filter the big side before it is shuffled (guide §3.2): points in
     # cells no polygon covers can never match, so a broadcast semi-join on
@@ -372,7 +224,7 @@ def pip_join(
     # a polygon may span several cover cells; a point matches in at most
     # one (its own cell) so no dedupe needed — the cell equi-join yields
     # each (point, poly) pair exactly once.
-    return _refine_pip_codegen(cand) if use_codegen else _refine_pip(cand)
+    return _refine_pip(cand)
 
 
 # ---------------------------------------------------------------------------

@@ -127,7 +127,11 @@ def with_lm_score(
     # collide, fall back to the exact string-pair join unchanged.
     # Probe-side false matches remain possible in principle
     # (|model| * |distinct bigrams| / 2^64 ~ 1e-8) — the same accepted
-    # class as the r8 gram-hash carriers.
+    # class as the r8 gram-hash carriers. Unlike those, a false match here
+    # changes an output value: the corpus bigram gets the colliding model
+    # bigram's cost instead of oov_cost. So an lm-score hash mismatch
+    # against the oracle should be re-checked with the string-pair join
+    # before it is treated as a logic bug.
     from geoharvest_spark.functions import spark_xxhash64_strings
 
     rows = model_rows(model)

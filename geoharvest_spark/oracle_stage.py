@@ -31,7 +31,9 @@ import os
 import numpy as np
 import pandas as pd
 
-STAGE_DIR = "/root/repo/.oracle_stage"
+STAGE_DIR = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".oracle_stage"
+)
 
 
 def _write(pdf: pd.DataFrame, name: str) -> str:

@@ -61,6 +61,12 @@ def get_spark(
         # setting is inert there; locally it lets multi-row-group files
         # split down to row-group granularity.
         .config("spark.sql.files.minPartitionNum", str(n_shuffle))
+        # Python workers import this package by name: put its parent
+        # directory on their path so jobs run from any working directory
+        .config(
+            "spark.executorEnv.PYTHONPATH",
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        )
     )
     # shuffle/spill files on tmpfs when available: shuffle-heavy operators
     # (tile rollup, knn candidate join) are otherwise bound by the boot

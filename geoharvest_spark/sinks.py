@@ -20,9 +20,10 @@ import json
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .functions import latest_per_key
 from .schema import AARDVARK_FIELDS
 
 _EXT = {"fgdc": "xml", "iso19139": "xml", "marc": "xml",
@@ -118,8 +119,7 @@ def pooled_events(
     STRINGS ('true'/'false'), which downstream consumers expect.
     """
     df = with_output_filenames(normalized)
-    w = Window.partitionBy("identifier").orderBy(F.col(seq_col).desc())
-    last = df.withColumn("_rn", F.row_number().over(w)).where(F.col("_rn") == 1)
+    last = latest_per_key(df, ["identifier"], [F.col(seq_col).desc()])
     restricted = F.when(
         F.col("aardvark.dct_accessRights_s") == "Public", F.lit("false")
     ).otherwise(F.lit("true"))

@@ -26,6 +26,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .functions import latest_per_key
+
 SNAPSHOT_COLS = "snap int, identifier string, event string, payload string"
 
 
@@ -54,11 +56,8 @@ class SnapshotStore:
         """Time travel: the table AS OF snapshot_id — latest event per id
         across snaps <= N, deleted rows dropped. Partition-pruned scan."""
         t = self.table().where(F.col("snap") <= F.lit(snapshot_id))
-        w = Window.partitionBy("identifier").orderBy(F.col("snap").desc())
-        return (
-            t.withColumn("_rn", F.row_number().over(w))
-            .where((F.col("_rn") == 1) & (F.col("event") != "deleted"))
-            .drop("_rn")
+        return latest_per_key(t, ["identifier"], [F.col("snap").desc()]).where(
+            F.col("event") != "deleted"
         )
 
 
@@ -86,15 +85,8 @@ def deleted_payloads(
         )
         .join(F.broadcast(deleted), "identifier", "left_semi")
     )
-    w = Window.partitionBy("identifier").orderBy(F.col("snap").desc())
-    return (
-        prior.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .select(
-            "identifier",
-            F.col("snap").alias("from_snap"),
-            "payload",
-        )
+    return latest_per_key(prior, ["identifier"], [F.col("snap").desc()]).select(
+        "identifier", F.col("snap").alias("from_snap"), "payload"
     )
 
 

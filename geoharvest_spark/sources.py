@@ -62,20 +62,6 @@ def filename_strategy_filter(
     return df.where(F.col(url_col).rlike(pattern))
 
 
-def include_exclude_filter(
-    df: DataFrame,
-    include: list[str] | None,
-    exclude: list[str] | None,
-    col: str = "repo",
-) -> DataFrame:
-    """F4/U2 (ogm.py:130-144)."""
-    if include:
-        df = df.where(F.col(col).isin(include))
-    if exclude:
-        df = df.where(~F.col(col).isin(exclude))
-    return df
-
-
 def alma_file_date(url: Column) -> Column:
     """S9: date embedded in the Alma export filename (alma.py:28-31)."""
     d = F.regexp_extract(url, ALMA_DATE_RE, 1)

@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .functions import latest_per_key
+
 EVENT_STREAM_SCHEMA = T.StructType(
     [
         T.StructField("message_id", T.StringType(), False),
@@ -90,15 +92,9 @@ def last_event_per_url_batch(df: DataFrame) -> DataFrame:
     message_id) row per url. message_id is the final tie-breaker so rows
     with fully equal (seq, event_ts) pick a deterministic winner across
     retriggers/retries (matches last_event_stateful's fold)."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("url").orderBy(
-        F.col("seq").desc(), F.col("event_ts").desc(), F.col("message_id").desc()
-    )
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
+    return latest_per_key(
+        df, ["url"],
+        [F.col("seq").desc(), F.col("event_ts").desc(), F.col("message_id").desc()],
     )
 
 

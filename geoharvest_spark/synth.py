@@ -21,7 +21,6 @@ prefix-stable table (row i is identical regardless of n).
 from __future__ import annotations
 
 import datetime as dt
-import hashlib
 import json
 
 import numpy as np
@@ -530,9 +529,3 @@ def query_points_df(spark, n: int = 300):
     from .schema import QUERY_POINTS_SCHEMA
 
     return spark.createDataFrame(query_points_pdf(n), schema=QUERY_POINTS_SCHEMA)
-
-
-def stable_hash(s: str) -> int:
-    """Deterministic 63-bit hash (md5-based; NOT Python hash(), which is
-    salted per-process and would break resume determinism)."""
-    return int.from_bytes(hashlib.md5(s.encode()).digest()[:8], "big") >> 1

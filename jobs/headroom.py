@@ -1,157 +1,15 @@
-"""Scale-headroom check (one-off, local[32]): run the round-2 plans —
-hierarchical tile rollup and IVF ANN — at bench volume and at ~8-20x it,
-and report per-row cost. Flat per-row cost = the plan is linear in input
-(no quadratic blowup hiding at small scale).
+"""Deterministic word-salad document corpus shared by the webtext
+harnesses (``bench.py``, ``jobs/scaling.py``, ``jobs/webtext_pipeline.py``,
+the benchmark's ``web`` workload) and ``tests/test_curation.py``.
 
-Prints one JSON line per (workload, volume).
+Pure JVM-side generation: token j of doc i is ``_VOCAB[xxhash64(i, j) %
+len(_VOCAB)]``, so the text depends only on the doc id and never on the
+partitioning or the session.
 """
 
 from __future__ import annotations
 
-import json
-import sys
-import time
-
-sys.path.insert(0, "/root/repo")
-
-import numpy as np  # noqa: E402
-from pyspark.sql import functions as F  # noqa: E402
-
-from geoharvest_spark.session import get_spark  # noqa: E402
-
-
-def synth_points(spark, n_base: int, mult: int):
-    """Deterministic lon/lat points: n_base * mult rows, no parquet I/O."""
-    df = spark.range(0, n_base * mult, 1, 128)
-    return df.select(
-        ((F.col("id") * 7919) % 36000 / 100.0 - 180.0).alias("lon"),
-        ((F.col("id") * 104729) % 18000 / 100.0 - 90.0).alias("lat"),
-    )
-
-
-def synth_embeddings(spark, n: int, dim: int = 64):
-    """Deterministic array<double> embeddings, JVM-side (no Python in the
-    generator): element j of row i = fract(sin-free integer hash)."""
-    df = spark.range(0, n, 1, 128).withColumnRenamed("id", "vec_id")
-    arr = F.array(
-        *[
-            (((F.col("vec_id") * (7919 + 13 * j) + 104729 * j) % 10007)
-             / 10007.0 - 0.5)
-            for j in range(dim)
-        ]
-    )
-    return df.select("vec_id", arr.alias("embedding"))
-
-
-def synth_embeddings_iid(spark, n: int, dim: int = 64):
-    """Uncorrelated vectors via xxhash64 per (row, dim) — LSH self-joins
-    MUST NOT be benchmarked on structured (congruential) synth: correlated
-    rows collapse into few buckets and the quadratic within-bucket work
-    reports a misleadingly slow number (round-3 finding, BASELINE.md)."""
-    df = spark.range(0, n, 1, 128).withColumnRenamed("id", "vec_id")
-    arr = F.array(
-        *[
-            (
-                F.pmod(F.xxhash64(F.col("vec_id"), F.lit(j)), F.lit(1000003))
-                / 1000003.0
-                - 0.5
-            )
-            for j in range(dim)
-        ]
-    )
-    return df.select("vec_id", arr.alias("embedding"))
-
-
-def near_dup_corpus(spark, n: int, dim: int = 64):
-    """iid corpus + planted near-dups (every 10th vector perturbed by
-    ~0.03% of its norm, copied to id+n): the only pairs at cos >= 0.9."""
-    base = synth_embeddings_iid(spark, n, dim)
-    delta = F.transform(
-        F.col("embedding"),
-        lambda x, j: x
-        + ((F.col("vec_id") * (F.lit(31) + j) + F.lit(7) * j) % 97)
-        / F.lit(100000.0),
-    )
-    pert = base.where(F.col("vec_id") % 10 == 0).select(
-        (F.col("vec_id") + n).alias("vec_id"), delta.alias("embedding")
-    )
-    # float32 like a real embedding corpus — halves every join/shuffle byte
-    both = base.unionByName(pert).select(
-        "vec_id", F.col("embedding").cast("array<float>").alias("embedding")
-    )
-    return both, n // 10
-
-
-def stream_state_leg(spark, n_keys: int, batch2_rows: int = 5_000) -> dict:
-    """last_event_stateful with state >> batch: batch 1 seeds n_keys state
-    rows, batch 2 folds batch2_rows updates into that state. Per-batch
-    cost must track BATCH size, not state size (the state store loads
-    only touched groups; Python sees only groups with data)."""
-    import json as _json
-    import shutil
-    import tempfile
-
-    from geoharvest_spark.streaming import (
-        EVENT_STREAM_SCHEMA,
-        last_event_stateful,
-    )
-
-    base = tempfile.mkdtemp(prefix=f"hd_state_{n_keys}_")
-    in_dir = f"{base}/in"
-
-    def cols(key_expr, seq0: int):
-        return [
-            F.concat(
-                F.lit("m"), (F.lit(seq0) + F.col("id")).cast("string")
-            ).alias("message_id"),
-            F.timestamp_seconds(
-                F.lit(1_700_000_000) + (F.col("id") % 86_400)
-            ).alias("event_ts"),
-            F.lit("created").alias("event"),
-            F.concat(
-                F.lit("https://cdn.mit.test/gis/u"),
-                key_expr.cast("string"),
-                F.lit(".zip"),
-            ).alias("url"),
-            (F.lit(seq0) + F.col("id")).alias("seq"),
-        ]
-
-    spark.range(0, n_keys, 1, 32).select(*cols(F.col("id"), 0)).coalesce(
-        1
-    ).write.mode("append").parquet(in_dir)
-    spark.range(0, batch2_rows, 1, 32).select(
-        *cols((F.col("id") * 37) % n_keys, n_keys)
-    ).coalesce(1).write.mode("append").parquet(in_dir)
-    stream = (
-        spark.readStream.schema(EVENT_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
-    q = (
-        last_event_stateful(stream)
-        .writeStream.format("noop")
-        .option("checkpointLocation", f"{base}/ckpt")
-        .outputMode("update")
-        .start()
-    )
-    q.processAllAvailable()
-    progress = [_json.loads(p.json) for p in q.recentProgress]
-    q.stop()
-    shutil.rmtree(base, ignore_errors=True)
-    legs = {}
-    for p in progress:
-        n_in = p.get("numInputRows", 0)
-        if n_in == n_keys:
-            legs["seed_batch_sec"] = p["durationMs"]["triggerExecution"] / 1e3
-        elif n_in == batch2_rows:
-            legs["update_batch_sec"] = p["durationMs"]["triggerExecution"] / 1e3
-    return legs
-
-
-def time_noop(df) -> float:
-    t0 = time.perf_counter()
-    df.write.format("noop").mode("overwrite").save()
-    return time.perf_counter() - t0
+from pyspark.sql import functions as F
 
 
 _VOCAB = [
@@ -188,1480 +46,3 @@ def synth_docs(spark, n: int, n_tokens: int = 100):
     return df.select(
         "doc_id", doc_text_expr(F.col("doc_id"), n_tokens).alias("text")
     )
-
-
-def run_textops_legs(spark) -> None:
-    """Round-4 webtext operators at 8x volume: chunk dedup and benchmark
-    decontamination must stay linear (explode + hash aggregates only)."""
-    from geoharvest_spark.textops import chunk_dedup, contamination_stats
-
-    for n_docs in (250_000, 2_000_000):
-        corpus = synth_docs(spark, n_docs)
-        for name, build in (
-            ("chunk_dedup", lambda c=corpus: chunk_dedup(c, chunk_tokens=20)),
-            (
-                "doc_decontaminate",
-                lambda c=corpus: contamination_stats(
-                    c.where(F.col("doc_id") % 50 != 0),
-                    c.where(F.col("doc_id") % 50 == 0),
-                    n=8,
-                ),
-            ),
-        ):
-            best = float("inf")
-            for _ in range(2):
-                spark.catalog.clearCache()
-                t0 = time.perf_counter()
-                build().write.format("noop").mode("overwrite").save()
-                best = min(best, time.perf_counter() - t0)
-            print(
-                json.dumps(
-                    {
-                        "workload": name,
-                        "docs": n_docs,
-                        "tokens_per_doc": 100,
-                        "sec": round(best, 3),
-                        "docs_per_sec": round(n_docs / best, 1),
-                        "us_per_doc": round(best / n_docs * 1e6, 2),
-                    }
-                )
-            )
-
-
-def run_round4_legs(spark) -> None:
-    """Round-4 additions: dedup_embed_cosine (LSH self-join) and
-    last_event_stateful (state >> batch)."""
-    from geoharvest_spark.simsearch import cosine_near_dup_pairs
-
-    # LSH near-dup SELF-join: n_bits grows with the corpus (~log2(n)) so
-    # expected bucket size stays a few rows and candidates stay O(n)
-    for n_vec, n_bits in ((250_000, 17), (2_000_000, 20)):
-        corpus, n_planted = near_dup_corpus(spark, n_vec)
-        spark.catalog.clearCache()
-        best, got = float("inf"), None
-        for _ in range(2):
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            got = cosine_near_dup_pairs(
-                corpus, dim=64, threshold=0.9, n_bits=n_bits, n_tables=8
-            ).count()
-            best = min(best, time.perf_counter() - t0)
-        rows_total = n_vec + n_planted
-        print(
-            json.dumps(
-                {
-                    "workload": "dedup_embed_cosine",
-                    "rows": rows_total,
-                    "n_bits": n_bits,
-                    "n_tables": 8,
-                    "planted_pairs": n_planted,
-                    "found_pairs": got,
-                    "recall_ok": got == n_planted,
-                    "sec": round(best, 3),
-                    "rows_per_sec": round(rows_total / best, 1),
-                    "us_per_row": round(best / rows_total * 1e6, 2),
-                }
-            )
-        )
-
-    for n_keys in (100_000, 800_000):
-        legs = stream_state_leg(spark, n_keys, batch2_rows=5_000)
-        print(
-            json.dumps(
-                {
-                    "workload": "last_event_stateful",
-                    "state_keys": n_keys,
-                    "update_batch_rows": 5_000,
-                    **{k: round(v, 3) for k, v in legs.items()},
-                }
-            )
-        )
-
-
-def run_round5_legs(spark) -> None:
-    """Round-5 additions: connected components (pair-graph clustering)
-    and the narrow corpus ops (packing, PII scrub, stratified sample,
-    per-domain cap) at 8x scale — per-doc cost must be flat or falling."""
-    from pyspark.sql import functions as F
-
-    from geoharvest_spark import textops as tx
-
-    for n_docs in (250_000, 2_000_000):
-        docs = synth_docs(spark, n_docs, n_tokens=100).cache()
-        docs.count()
-        a = F.col("doc_id")
-        ids = docs.select("doc_id")
-        chain = ids.where(a % 10 < 3).select(
-            a.alias("id_a"), (a + 1).alias("id_b")
-        )
-        star = ids.where((a % 37 != 0) & (a % 4 == 0)).select(
-            a.alias("id_a"), (a - a % 37).alias("id_b")
-        )
-        edges = chain.union(star)
-        legs = {
-            "connected_components": lambda: tx.connected_components(edges)
-            .groupBy("component")
-            .count()
-            .count(),
-            "pack_sequences": lambda: time_noop(
-                tx.pack_sequences(docs, seq_len=2048, buckets=64)
-            ),
-            "redact_pii": lambda: time_noop(tx.redact_pii(docs)),
-            "stratified_sample": lambda: time_noop(
-                tx.stratified_hash_sample(
-                    docs.withColumn(
-                        "stratum", (F.col("doc_id") % 5).cast("string")
-                    ),
-                    "stratum",
-                    {"0": 10000, "1": 5000, "2": 2500, "3": 1000, "4": 0},
-                )
-            ),
-            "cap_per_key": lambda: time_noop(
-                tx.cap_per_key(
-                    docs.withColumn("domain", (F.col("doc_id") % 10_000)),
-                    "domain",
-                    50,
-                )
-            ),
-        }
-        for name, fn in legs.items():
-            best = float("inf")
-            for _ in range(2):
-                spark.catalog.clearCache()
-                docs.cache().count()
-                t0 = time.perf_counter()
-                fn()
-                best = min(best, time.perf_counter() - t0)
-            print(
-                json.dumps(
-                    {
-                        "workload": name,
-                        "docs": n_docs,
-                        "sec": round(best, 3),
-                        "us_per_doc": round(best / n_docs * 1e6, 2),
-                    }
-                ),
-                flush=True,
-            )
-        docs.unpersist()
-
-
-def run_round6b_legs(spark) -> None:
-    """Late-round-6 additions at 4-8x scale: model-quality scoring,
-    the spatial distance-range join, co-occurrence counting, and
-    anchor aggregation. Per-unit cost must be flat or falling."""
-    from pyspark.sql import functions as F
-
-    from geoharvest_spark.clustering import distance_join
-    from geoharvest_spark.qmodel import quality_model_scores
-    from geoharvest_spark.textops import cooccurrence_counts
-    from geoharvest_spark.webops import anchor_stats
-
-    for n_docs in (250_000, 1_000_000):
-        docs = synth_docs(spark, n_docs, n_tokens=100).cache()
-        docs.count()
-        for name, build in (
-            (
-                "qmodel_score",
-                lambda d=docs: quality_model_scores(d).select(
-                    "doc_id", "score"
-                ),
-            ),
-            (
-                "cooccurrence_w2",
-                lambda d=docs: cooccurrence_counts(d, window=2),
-            ),
-        ):
-            best = min(time_noop(build()) for _ in range(2))
-            print(
-                json.dumps(
-                    {
-                        "workload": name,
-                        "rows": n_docs,
-                        "sec": round(best, 3),
-                        "us_per_doc": round(best / n_docs * 1e6, 2),
-                    }
-                ),
-                flush=True,
-            )
-        docs.unpersist()
-
-    # constant density (one point per unit cell on average, r=1):
-    # output pairs scale linearly, so sec-per-point must stay flat
-    for n_pts in (1_000_000, 4_000_000):
-        side = int(n_pts**0.5)
-        i = F.col("id")
-        pts = (
-            spark.range(n_pts, numPartitions=48)
-            .select(
-                i.alias("pid"),
-                ((i % side) + ((i * 13) % 97) / F.lit(100.0)).alias("x"),
-                (
-                    F.expr(f"id div {side}") + ((i * 17) % 97) / F.lit(100.0)
-                ).alias("y"),
-            )
-            .cache()
-        )
-        pts.count()
-        best = min(
-            time_noop(
-                distance_join(
-                    pts, radius=1.0, id_col="pid"
-                ).select(F.count(F.lit(1)))
-            )
-            for _ in range(2)
-        )
-        print(
-            json.dumps(
-                {
-                    "workload": "distance_join_r1",
-                    "rows": n_pts,
-                    "sec": round(best, 3),
-                    "us_per_point": round(best / n_pts * 1e6, 2),
-                }
-            ),
-            flush=True,
-        )
-        pts.unpersist()
-
-    for n_pages in (100_000, 400_000):
-        i = F.col("id")
-        pages = (
-            spark.range(n_pages, numPartitions=48)
-            .select(
-                F.concat(
-                    F.lit("http://s"),
-                    (i % 50).cast("string"),
-                    F.lit(".ex/p/"),
-                    i.cast("string"),
-                ).alias("url"),
-                F.concat(
-                    F.lit('<html><body><a href="/t/'),
-                    ((i * 3 + 1) % 1000).cast("string"),
-                    F.lit('">read v'),
-                    (i % 7).cast("string"),
-                    F.lit('</a><a href="http://hub.ex/b"> <b>Top</b> pick '),
-                    (i % 11).cast("string"),
-                    F.lit("</a></body></html>"),
-                ).alias("html"),
-            )
-            .cache()
-        )
-        pages.count()
-        best = min(time_noop(anchor_stats(pages)) for _ in range(2))
-        print(
-            json.dumps(
-                {
-                    "workload": "anchor_stats",
-                    "rows": n_pages,
-                    "sec": round(best, 3),
-                    "us_per_page": round(best / n_pages * 1e6, 2),
-                }
-            ),
-            flush=True,
-        )
-        pages.unpersist()
-
-
-def run_round6_legs(spark) -> None:
-    """Round-6 additions at 8x scale: BPE token accounting (both
-    application paths), zonal statistics (raster x vector join), and
-    integer PageRank (4x nodes). Per-unit cost must be flat or
-    falling."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    # pagerank: planted 4-out-regular graph, 5 iterations; the fixed
-    # per-iteration driver sync amortizes as the graph grows, so
-    # us-per-node must FALL at 4x
-    from geoharvest_spark.graph import pagerank
-
-    for n_ids in (250_000, 1_000_000):
-        ids = spark.range(n_ids).select("id").repartition(48).cache()
-        ids.count()
-        s = F.col("id")
-        best = float("inf")
-        for _ in range(2):
-            edges = ids.select(
-                s.alias("src"),
-                F.explode(
-                    F.array(*[(s * m + k) % n_ids
-                              for m, k in ((7, 1), (11, 3), (13, 5), (17, 9))])
-                ).alias("dst"),
-            ).where(F.col("src") != F.col("dst"))
-            t0 = time.perf_counter()
-            time_noop(pagerank(edges, nodes=ids, iters=5, scale=10**10))
-            best = min(best, time.perf_counter() - t0)
-        print(
-            json.dumps(
-                {
-                    "workload": "pagerank_5it",
-                    "nodes": n_ids,
-                    "edges": n_ids * 4,
-                    "sec": round(best, 3),
-                    "us_per_node": round(best / n_ids * 1e6, 2),
-                }
-            ),
-            flush=True,
-        )
-        ids.unpersist()
-
-    from geoharvest_spark import raster as rst
-    from geoharvest_spark.bpe import (
-        corpus_merges,
-        token_count_udf,
-        with_bpe_token_count,
-    )
-
-    merges = list(corpus_merges("/root/testdata/sf0.1", 200, 64))
-    udf = token_count_udf(merges)
-    for n_docs in (250_000, 2_000_000):
-        docs = synth_docs(spark, n_docs, n_tokens=100).cache()
-        docs.count()
-        legs = {
-            "bpe_count_codegen": lambda: time_noop(
-                with_bpe_token_count(docs, merges).select(
-                    "doc_id", "n_tokens_bpe"
-                )
-            ),
-            "bpe_count_udf": lambda: time_noop(
-                docs.select("doc_id", udf(F.col("text")).alias("n"))
-            ),
-        }
-        for name, fn in legs.items():
-            best = float("inf")
-            for _ in range(2):
-                spark.catalog.clearCache()
-                docs.cache().count()
-                t0 = time.perf_counter()
-                fn()
-                best = min(best, time.perf_counter() - t0)
-            print(
-                json.dumps(
-                    {
-                        "workload": name,
-                        "docs": n_docs,
-                        "sec": round(best, 3),
-                        "us_per_doc": round(best / n_docs * 1e6, 2),
-                    }
-                ),
-                flush=True,
-            )
-        docs.unpersist()
-
-    # zonal stats: rasters x world-grid zones, pixels never shuffle
-    def _mk_rast(batches):
-        from geoharvest_spark.raster import encode_tiff
-
-        for pdf in batches:
-            rows = []
-            for rid in pdf["rid"]:
-                rid = int(rid)
-                rng = np.random.default_rng(rid)
-                img = rng.integers(0, 256, (256, 256)).astype(np.uint8)
-                rows.append(
-                    (
-                        rid,
-                        encode_tiff(
-                            img,
-                            pixel_scale=(0.02, 0.02),
-                            tiepoint=(
-                                -175.0 + (rid % 50) * 7.0,
-                                80.0 - (rid % 4) * 40.0,
-                            ),
-                        ),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=["rid", "payload"])
-
-    zones = spark.createDataFrame(
-        [
-            (
-                f"z{k}",
-                "POLYGON (({w} {s}, {e} {s}, {e} {n}, {w} {n}, {w} {s}))".format(
-                    w=-180.005 + (k % 5) * 72.0,
-                    s=-90.005 + (k // 5) * 36.0,
-                    e=-180.005 + (k % 5) * 72.0 + 72.0,
-                    n=-90.005 + (k // 5) * 36.0 + 36.0,
-                ),
-                {
-                    "w": -180.005 + (k % 5) * 72.0,
-                    "e": -180.005 + (k % 5) * 72.0 + 72.0,
-                    "n": -90.005 + (k // 5) * 36.0 + 36.0,
-                    "s": -90.005 + (k // 5) * 36.0,
-                },
-            )
-            for k in range(25)
-        ],
-        "poly_id string, wkt string, bbox struct<w:double,e:double,n:double,s:double>",
-    )
-    for n_rast in (200, 1600):
-        rasters = (
-            spark.range(n_rast)
-            .select(F.col("id").cast("int").alias("rid"))
-            .repartition(64)
-            .mapInPandas(_mk_rast, "rid int, payload binary")
-            .cache()
-        )
-        rasters.count()
-        best = float("inf")
-        for _ in range(2):
-            spark.catalog.clearCache()
-            rasters.cache().count()
-            t0 = time.perf_counter()
-            time_noop(rst.raster_zonal_stats(rasters, zones, res=7, pip_res=5))
-            best = min(best, time.perf_counter() - t0)
-        px = n_rast * 256 * 256
-        print(
-            json.dumps(
-                {
-                    "workload": "raster_zonal_stats",
-                    "pixels": px,
-                    "sec": round(best, 3),
-                    "ns_per_pixel": round(best / px * 1e9, 2),
-                }
-            ),
-            flush=True,
-        )
-        rasters.unpersist()
-
-
-def main() -> None:
-    spark = get_spark("headroom", cores="32")
-    from geoharvest_spark.simsearch import ivf_centroids_np, ivf_topk
-    from geoharvest_spark.tiles import tile_pyramid_counts_rollup
-
-    # warm-up: python worker pool + codegen
-    time_noop(synth_points(spark, 100_000, 1))
-
-    for n_pts in (2_400_000, 19_200_000):
-        pts = synth_points(spark, n_pts, 1)
-        best = min(
-            time_noop(tile_pyramid_counts_rollup(pts)) for _ in range(2)
-        )
-        print(
-            json.dumps(
-                {
-                    "workload": "tile_pyramid_rollup",
-                    "rows": n_pts,
-                    "levels": 5,
-                    "sec": round(best, 3),
-                    "rows_per_sec": round(n_pts / best, 1),
-                    "ns_per_row": round(best / n_pts * 1e9, 1),
-                }
-            )
-        )
-
-    # IVF ANN: centroids trained once on a driver-side sample (standard IVF),
-    # then distributed assignment + probe-join + re-rank over the corpus
-    rs = np.random.RandomState(7)
-    train = rs.normal(size=(20_000, 64))
-    cents = ivf_centroids_np(train, n_lists=64)
-    # warm the pandas-UDF worker pools (first heavy Python stage pays a
-    # one-time ~15s spawn/import storm — see CLAUDE.md)
-    time_noop(
-        ivf_topk(
-            synth_embeddings(spark, 100),
-            synth_embeddings(spark, 10_000),
-            cents,
-            k=10,
-            n_probe=4,
-        )
-    )
-    for n_vec in (250_000, 2_000_000):
-        corpus = synth_embeddings(spark, n_vec)
-        queries = synth_embeddings(spark, 100)
-        spark.catalog.clearCache()
-        best = min(
-            time_noop(ivf_topk(queries, corpus, cents, k=10, n_probe=4))
-            for _ in range(2)
-        )
-        print(
-            json.dumps(
-                {
-                    "workload": "ivf_ann",
-                    "rows": n_vec,
-                    "queries": 100,
-                    "n_lists": 64,
-                    "n_probe": 4,
-                    "sec": round(best, 3),
-                    "rows_per_sec": round(n_vec / best, 1),
-                    "ns_per_row": round(best / n_vec * 1e9, 1),
-                }
-            )
-        )
-    run_round4_legs(spark)
-    run_round5_legs(spark)
-    run_round6_legs(spark)
-    run_round6b_legs(spark)
-    run_round6c_legs(spark)
-    run_round6d_legs(spark)
-    run_round6e_legs(spark)
-    run_round6f_legs(spark)
-    run_round6g_legs(spark)
-    run_textops_legs(spark)
-    spark.stop()
-
-
-if __name__ == "__main__":
-    main()
-
-
-def run_round6c_legs(spark) -> None:
-    """Late-round-6 batch 2 at 4-8x scale: image dHash near-dup, the
-    funnel fold, HLL registers, and the Z-order key. Per-unit cost must
-    be flat or falling."""
-    from pyspark.sql import functions as F
-
-    from geoharvest_spark.funnel import funnel_counts
-    from geoharvest_spark.imagehash import dhash_near_dups, with_image_dhash
-    from geoharvest_spark.index import zorder_key
-    from geoharvest_spark.sketch import hll_estimate, hll_registers
-
-    # image dhash: distributed gray-PPM synthesis (24x27, ~2 KB each),
-    # decode + hash + band join + Hamming filter all on the timed path
-    def _ppm_images(n):
-        import numpy as np
-        import pandas as pd
-
-        def _gen(batches):
-            for pdf in batches:
-                payloads = []
-                for i in pdf["id"]:
-                    grid = np.random.RandomState(int(i) % 100_000).randint(
-                        0, 256, size=(8, 9)
-                    )
-                    img = np.repeat(np.repeat(grid, 3, 0), 3, 1).astype(
-                        np.uint8
-                    )
-                    rgb = np.stack([img, img, img], axis=2)
-                    payloads.append(
-                        b"P6\n%d %d\n255\n" % (rgb.shape[1], rgb.shape[0])
-                        + rgb.tobytes()
-                    )
-                yield pd.DataFrame(
-                    {
-                        "media_id": pdf["id"].astype(str),
-                        "kind": "image",
-                        "payload": payloads,
-                    }
-                )
-
-        return spark.range(n, numPartitions=48).mapInPandas(
-            _gen, "media_id string, kind string, payload binary"
-        )
-
-    for n_img in (50_000, 200_000):
-        imgs = _ppm_images(n_img)
-        best = min(
-            time_noop(dhash_near_dups(with_image_dhash(imgs)))
-            for _ in range(2)
-        )
-        print(
-            json.dumps(
-                {
-                    "workload": "image_dhash_dups",
-                    "rows": n_img,
-                    "sec": round(best, 3),
-                    "us_per_image": round(best / n_img * 1e6, 2),
-                }
-            ),
-            flush=True,
-        )
-
-    # funnel + HLL over synthetic event streams (JVM-side generator)
-    i = F.col("id")
-    for n_ev in (1_000_000, 8_000_000):
-        ev = spark.range(n_ev, numPartitions=48).select(
-            i.alias("event_id"),
-            F.timestamp_micros(
-                F.lit(1_700_000_000_000_000) + (i * 7919) % 2_592_000_000_000
-            ).alias("ts"),
-            (i % 50_000).alias("user_id"),
-            F.element_at(
-                F.array(
-                    F.lit("view"),
-                    F.lit("click"),
-                    F.lit("purchase"),
-                    F.lit("error"),
-                    F.lit("signup"),
-                ),
-                ((i * 13) % 5 + 1).cast("int"),
-            ).alias("event_type"),
-            F.lit(0.0).alias("value"),
-            F.lit("{}").alias("props"),
-        ).cache()
-        ev.count()
-        for name, build in (
-            (
-                "funnel_fold",
-                lambda d=ev: funnel_counts(
-                    d, ("view", "click", "purchase")
-                ),
-            ),
-            (
-                "hll_grouped",
-                lambda d=ev: hll_estimate(
-                    hll_registers(
-                        d, "user_id", group_cols=("event_type",)
-                    ),
-                    group_cols=("event_type",),
-                ),
-            ),
-        ):
-            best = min(time_noop(build()) for _ in range(2))
-            print(
-                json.dumps(
-                    {
-                        "workload": name,
-                        "rows": n_ev,
-                        "sec": round(best, 3),
-                        "us_per_event": round(best / n_ev * 1e6, 3),
-                    }
-                ),
-                flush=True,
-            )
-        ev.unpersist()
-
-    # z-order key: pure codegen throughput over synthetic points
-    for n_pts in (4_000_000, 16_000_000):
-        pts = spark.range(n_pts, numPartitions=48).select(
-            ((i * 7919 % 36000) / 100.0 - 180.0).alias("lon"),
-            ((i * 104729 % 18000) / 100.0 - 90.0).alias("lat"),
-        )
-        best = min(
-            time_noop(
-                pts.select(
-                    zorder_key(F.col("lon"), F.col("lat"), 12).alias("z")
-                )
-            )
-            for _ in range(2)
-        )
-        print(
-            json.dumps(
-                {
-                    "workload": "zorder_key",
-                    "rows": n_pts,
-                    "sec": round(best, 3),
-                    "us_per_point": round(best / n_pts * 1e6, 3),
-                }
-            ),
-            flush=True,
-        )
-
-
-def run_round6d_legs(spark) -> None:
-    """Late-round-6 batch 3 at 4-8x scale: bloom scan pruning, the
-    Count-Min sketch build, OHLC bars, OD flows + stay points, and
-    hub-safe triangle counting. Per-unit cost must be flat or falling."""
-    from pyspark.sql import functions as F
-
-    from geoharvest_spark.bars import ohlc_bars
-    from geoharvest_spark.bloom import bloom_build, bloom_filter_where
-    from geoharvest_spark.graph import triangle_count
-    from geoharvest_spark.mobility import od_matrix, stay_points
-    from geoharvest_spark.sketch import cms_build
-
-    i = F.col("id")
-
-    # bloom: 100k-key dim -> 2^20-bit filter; probe the fact scan
-    dim = spark.range(100_000, numPartitions=16).select(
-        (i * 13 + 7).alias("key")
-    )
-    hx = bloom_build(dim, "key", m_bits=1 << 20, k=5)
-    for n_fact in (4_000_000, 16_000_000):
-        fact = spark.range(n_fact, numPartitions=48).select(
-            (i % 2_000_000).alias("key")
-        )
-        best = min(
-            time_noop(bloom_filter_where(fact, "key", hx, 1 << 20, 5))
-            for _ in range(2)
-        )
-        print(
-            json.dumps(
-                {
-                    "workload": "bloom_probe_scan",
-                    "rows": n_fact,
-                    "sec": round(best, 3),
-                    "us_per_row": round(best / n_fact * 1e6, 3),
-                }
-            ),
-            flush=True,
-        )
-
-    def _events(n):
-        return spark.range(n, numPartitions=48).select(
-            i.alias("event_id"),
-            F.timestamp_micros(
-                F.lit(1_700_000_000_000_000) + (i * 7919) % 2_592_000_000_000
-            ).alias("ts"),
-            (i % 50_000).alias("user_id"),
-            F.concat(F.lit("t"), (i % 40).cast("string")).alias("event_type"),
-            (i % 997 / 10.0).alias("value"),
-        )
-
-    def _fixes(n):
-        return spark.range(n, numPartitions=48).select(
-            i.alias("event_id"),
-            F.timestamp_micros(
-                F.lit(1_700_000_000_000_000) + (i * 7919) % 2_592_000_000_000
-            ).alias("ts"),
-            (i % 50_000).alias("user_id"),
-            ((i * 7919 % 36000) / 100.0 - 180.0).alias("lon"),
-            ((i * 104729 % 18000) / 100.0 - 90.0).alias("lat"),
-        )
-
-    for n in (2_000_000, 8_000_000):
-        ev = _events(n).cache()
-        ev.count()
-        for name, build in (
-            ("cms_build", lambda d=ev: cms_build(d, "user_id")),
-            ("ohlc_bars", lambda d=ev: ohlc_bars(d)),
-        ):
-            best = min(time_noop(build()) for _ in range(2))
-            print(
-                json.dumps(
-                    {
-                        "workload": name,
-                        "rows": n,
-                        "sec": round(best, 3),
-                        "us_per_event": round(best / n * 1e6, 3),
-                    }
-                ),
-                flush=True,
-            )
-        ev.unpersist()
-        fx = _fixes(n).cache()
-        fx.count()
-        for name, build in (
-            ("od_matrix", lambda d=fx: od_matrix(d, res=1)),
-            ("stay_points", lambda d=fx: stay_points(d, res=0)),
-        ):
-            best = min(time_noop(build()) for _ in range(2))
-            print(
-                json.dumps(
-                    {
-                        "workload": name,
-                        "rows": n,
-                        "sec": round(best, 3),
-                        "us_per_fix": round(best / n * 1e6, 3),
-                    }
-                ),
-                flush=True,
-            )
-        fx.unpersist()
-
-    # triangles: ring + two chord families, |E| ~ 3n
-    for n_nodes in (250_000, 1_000_000):
-        ed = (
-            spark.range(n_nodes, numPartitions=48)
-            .select(i.alias("src"), ((i + 1) % n_nodes).alias("dst"))
-            .unionAll(
-                spark.range(n_nodes, numPartitions=48).select(
-                    i.alias("src"), ((i * 7 + 3) % n_nodes).alias("dst")
-                )
-            )
-            .unionAll(
-                spark.range(n_nodes, numPartitions=48)
-                .where(i % 3 == 0)
-                .select(i.alias("src"), ((i + 2) % n_nodes).alias("dst"))
-            )
-        )
-        best = min(time_noop(triangle_count(ed)) for _ in range(2))
-        print(
-            json.dumps(
-                {
-                    "workload": "triangle_count",
-                    "edges": int(n_nodes * 7 / 3),
-                    "sec": round(best, 3),
-                    "us_per_edge": round(best / (n_nodes * 7 / 3) * 1e6, 3),
-                }
-            ),
-            flush=True,
-        )
-
-
-def run_round6e_legs(spark) -> None:
-    """Session-3 batch at 4x scale: BFS hops, trajectory lengths, TF-IDF,
-    boilerplate-line removal, prefix-filtered fuzzy join, the column
-    profiler, skyline, and the three ordered-event operators. Per-unit
-    cost must be flat or falling (the fuzzy join reports per-CANDIDATE
-    cost — similarity self-join work is output-bound, and candidate
-    count on a fixed gram vocabulary grows ~n^2/V by design)."""
-    import time as _time
-
-    from pyspark.sql import functions as F
-
-    from geoharvest_spark.graph import bfs_hops
-    from geoharvest_spark.linkage import blocked_fuzzy_join
-    from geoharvest_spark.mobility import trajectory_lengths
-    from geoharvest_spark.profile import profile_columns, skyline2d
-    from geoharvest_spark.retrieval import tfidf_top_terms
-    from geoharvest_spark.textops import remove_boilerplate_lines
-    from geoharvest_spark.timeseries import (
-        max_concurrent,
-        rolling_range_sum,
-        scd2_intervals,
-    )
-
-    i = F.col("id")
-
-    def emit(workload, n, sec, unit, per):
-        print(
-            json.dumps(
-                {
-                    "workload": workload,
-                    "rows": n,
-                    "sec": round(sec, 3),
-                    unit: round(per, 4),
-                }
-            ),
-            flush=True,
-        )
-
-    # BFS: expander-ish multigraph (ring + 7i+3 chords + thirds), |E|~7n/3;
-    # the call itself runs the per-level jobs, so time the invocation
-    for n_nodes in (250_000, 1_000_000):
-        ed = (
-            spark.range(n_nodes, numPartitions=48)
-            .select(i.alias("src"), ((i + 1) % n_nodes).alias("dst"))
-            .unionAll(
-                spark.range(n_nodes, numPartitions=48).select(
-                    i.alias("src"), ((i * 7 + 3) % n_nodes).alias("dst")
-                )
-            )
-            .unionAll(
-                spark.range(n_nodes, numPartitions=48)
-                .where(i % 3 == 0)
-                .select(i.alias("src"), ((i + 2) % n_nodes).alias("dst"))
-            )
-        )
-        best = None
-        for _ in range(2):
-            t0 = _time.perf_counter()
-            bfs_hops(ed, source=0, max_hops=16).write.format(
-                "noop"
-            ).mode("overwrite").save()
-            el = _time.perf_counter() - t0
-            best = el if best is None else min(best, el)
-        edges = int(n_nodes * 7 / 3)
-        emit("bfs_hops", edges, best, "us_per_edge", best / edges * 1e6)
-
-    def _fixes(n):
-        return spark.range(n, numPartitions=48).select(
-            i.alias("event_id"),
-            F.timestamp_micros(
-                F.lit(1_700_000_000_000_000) + (i * 7919) % 2_592_000_000_000
-            ).alias("ts"),
-            (i % 50_000).alias("user_id"),
-            F.concat(F.lit("t"), (i % 40).cast("string")).alias("event_type"),
-            ((i * 7919 % 36000) / 100.0 - 180.0).alias("lon"),
-            ((i * 104729 % 18000) / 100.0 - 90.0).alias("lat"),
-            ((i % 1000) / 100.0).alias("v"),
-        )
-
-    for n in (2_000_000, 8_000_000):
-        fx = _fixes(n).cache()
-        fx.count()
-        for name, build in (
-            (
-                "trajectory_lengths",
-                lambda d=fx: trajectory_lengths(d, ts_col="ts"),
-            ),
-            (
-                "rolling_range_sum",
-                lambda d=fx: rolling_range_sum(
-                    d, "user_id", "ts", "v", 86400
-                ),
-            ),
-            (
-                "scd2_intervals",
-                lambda d=fx: scd2_intervals(
-                    d, "user_id", "ts", "event_type", "event_id"
-                ),
-            ),
-            (
-                "max_concurrent",
-                lambda d=fx: max_concurrent(
-                    d.select(
-                        "event_type",
-                        F.col("ts").cast("long").alias("s"),
-                        (
-                            F.col("ts").cast("long")
-                            + 300
-                            + F.col("event_id") % 900
-                        ).alias("e"),
-                    ),
-                    "event_type",
-                    "s",
-                    "e",
-                ),
-            ),
-            (
-                "profile_columns",
-                lambda d=fx: profile_columns(
-                    d, ["event_id", "user_id", "event_type", "v"]
-                ),
-            ),
-            (
-                "skyline2d",
-                lambda d=fx: skyline2d(
-                    d.select(
-                        "event_id",
-                        (F.col("event_id") * 7919 % 999983).alias("x"),
-                        (F.col("event_id") * 104729 % 999979).alias("y"),
-                    ),
-                    "x",
-                    "y",
-                    "event_id",
-                ),
-            ),
-        ):
-            best = min(time_noop(build()) for _ in range(2))
-            emit(name, n, best, "us_per_row", best / n * 1e6)
-        fx.unpersist()
-
-    # text: generated docs with a per-source banner (boilerplate target)
-    for n_docs in (100_000, 400_000):
-        docs = spark.range(n_docs, numPartitions=48).select(
-            i.alias("doc_id"),
-            F.concat(F.lit("s"), (i % 200).cast("string")).alias("source"),
-            F.concat(
-                F.lit("s"),
-                (i % 200).cast("string"),
-                F.lit(" banner cookie notice accept all "),
-                doc_text_expr(i, 80),
-            ).alias("text"),
-        ).cache()
-        docs.count()
-        best = min(time_noop(tfidf_top_terms(docs, k=3)) for _ in range(2))
-        emit("tfidf_top_terms", n_docs, best, "us_per_doc", best / n_docs * 1e6)
-        best = min(
-            time_noop(remove_boilerplate_lines(docs)) for _ in range(2)
-        )
-        emit(
-            "boilerplate_lines", n_docs, best, "us_per_doc",
-            best / n_docs * 1e6,
-        )
-        docs.unpersist()
-
-    # fuzzy join: 12-char pseudo-random letter keys (17.5k gram space);
-    # report per-candidate cost — candidates ~ n^2/V on a fixed alphabet
-    for n_names in (50_000, 200_000):
-        chars = [
-            F.char(
-                F.pmod(F.xxhash64(i, F.lit(p)), F.lit(26)) + F.lit(97)
-            )
-            for p in range(12)
-        ]
-        names = spark.range(n_names, numPartitions=48).select(
-            i.alias("nid"), F.concat(*chars).alias("name")
-        ).cache()
-        names.count()
-        jd = blocked_fuzzy_join(
-            names,
-            names.select(
-                F.col("nid").alias("nid_b"), "name"
-            ),
-            "nid",
-            "nid_b",
-            "name",
-            max_dist=1,
-        )
-        # candidate volume for the per-candidate unit: prefix pairs
-        from geoharvest_spark.linkage import _gram_occurrences
-
-        occ = _gram_occurrences(
-            names.select(F.col("nid").alias("_id"), F.col("name").alias("_t")),
-            "_id",
-            "_t",
-            3,
-        )
-        freq = occ.groupBy("g", "occ").agg(F.count(F.lit(1)).alias("_df"))
-        from pyspark.sql import Window as W
-
-        pref = (
-            occ.join(freq, ["g", "occ"])
-            .withColumn(
-                "_rn",
-                F.row_number().over(
-                    W.partitionBy("_id").orderBy("_df", "g", "occ")
-                ),
-            )
-            .where(F.col("_rn") <= 4)
-            .select("_id", "g", "occ")
-        )
-        n_cand = (
-            pref.groupBy("g", "occ")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .agg(F.sum(F.col("c") * F.col("c")).alias("s"))
-            .collect()[0]["s"]
-        )
-        best = min(time_noop(jd) for _ in range(2))
-        print(
-            json.dumps(
-                {
-                    "workload": "fuzzy_prefix_join",
-                    "rows": n_names,
-                    "candidates": int(n_cand),
-                    "sec": round(best, 3),
-                    "ns_per_candidate": round(best / n_cand * 1e9, 1),
-                }
-            ),
-            flush=True,
-        )
-        names.unpersist()
-
-
-def run_round6f_legs(spark) -> None:
-    """Session-3 batch 2 at 4x scale: grid-density clustering, weighted
-    SSSP, k-core peeling, compression ratio, target encoding, feature
-    hashing, CDC apply, and the constraint suite. Per-unit cost must be
-    flat or falling; the loop operators (sssp/kcore) additionally report
-    round counts — the scalable claim is rounds ~ O(log n) / O(depth),
-    not rounds ~ O(n)."""
-    import time as _time
-
-    from pyspark.sql import functions as F
-
-    from geoharvest_spark.graph import kcore, sssp_weighted
-    from geoharvest_spark.mlprep import feature_hash, target_encode
-    from geoharvest_spark.mobility import grid_density_clusters
-    from geoharvest_spark.profile import check_constraints
-    from geoharvest_spark.snapshots import apply_changes
-    from geoharvest_spark.textops import with_compression_ratio
-
-    i = F.col("id")
-
-    def emit(workload, n, sec, unit, per, **kw):
-        row = {"workload": workload, "rows": n, "sec": round(sec, 3),
-               unit: round(per, 4)}
-        row.update(kw)
-        print(json.dumps(row), flush=True)
-
-    def timed_call(fn):
-        best = None
-        for _ in range(2):
-            t0 = _time.perf_counter()
-            fn().write.format("noop").mode("overwrite").save()
-            el = _time.perf_counter() - t0
-            best = el if best is None else min(best, el)
-        return best
-
-    # grid clusters: 2k planted blob centers, jittered points
-    for n_pts in (2_000_000, 8_000_000):
-        c = i % 2000
-        pts = spark.range(n_pts, numPartitions=48).select(
-            ((c * 7919 % 340) - 170.0 + (i * 13 % 200) / 100.0).alias("lon"),
-            ((c * 104729 % 160) - 80.0 + (i * 17 % 200) / 100.0).alias("lat"),
-        )
-        best = timed_call(
-            lambda p=pts, n=n_pts: grid_density_clusters(
-                p, res=6, min_pts=max(30, n // 20000)
-            )
-        )
-        emit("grid_density_clusters", n_pts, best, "us_per_point",
-             best / n_pts * 1e6)
-
-    # sssp + kcore on scaled graphs; chords keep sssp round count ~log n,
-    # the kcore chain depth is FIXED (10 layers) so peel rounds stay ~11
-    for n_nodes in (250_000, 1_000_000):
-        ed = (
-            spark.range(n_nodes, numPartitions=48)
-            .select(i.alias("src"), ((i + 1) % n_nodes).alias("dst"),
-                    (1 + (i * 3) % 9).alias("w"))
-            .unionAll(
-                spark.range(n_nodes, numPartitions=48).select(
-                    i.alias("src"), ((i * 7 + 3) % n_nodes).alias("dst"),
-                    (1 + (i * 5) % 7).alias("w"))
-            )
-        )
-        t0 = _time.perf_counter()
-        out = sssp_weighted(ed, source=0, max_rounds=80)
-        n_reach = out.count()
-        el = _time.perf_counter() - t0
-        emit("sssp_weighted", n_nodes * 2, el, "us_per_edge",
-             el / (n_nodes * 2) * 1e6, reached=n_reach)
-
-        core_n = (n_nodes * 2) // 3
-        ked = (
-            spark.range(core_n, numPartitions=48)
-            .select(i.alias("src"), ((i + 1) % core_n).alias("dst"))
-            .unionAll(
-                spark.range(core_n, numPartitions=48).select(
-                    i.alias("src"), ((i * 7 + 3) % core_n).alias("dst"))
-            )
-            .unionAll(
-                spark.range(core_n, n_nodes, numPartitions=48).select(
-                    i.alias("src"), (i - (n_nodes - core_n) // 10).alias("dst"))
-            )
-        )
-        t0 = _time.perf_counter()
-        nc = kcore(ked, k=2).count()
-        el = _time.perf_counter() - t0
-        emit("kcore", int(n_nodes * 2.33), el, "us_per_edge",
-             el / (n_nodes * 2.33) * 1e6, core=nc)
-
-    # text/docs legs
-    for n_docs in (100_000, 400_000):
-        docs = spark.range(n_docs, numPartitions=48).select(
-            i.alias("doc_id"), doc_text_expr(i, 80).alias("text")
-        ).cache()
-        docs.count()
-        best = timed_call(lambda d=docs: with_compression_ratio(d))
-        emit("compression_ratio", n_docs, best, "us_per_doc",
-             best / n_docs * 1e6)
-        best = timed_call(lambda d=docs: feature_hash(d, d=1024))
-        emit("feature_hash", n_docs, best, "us_per_doc",
-             best / n_docs * 1e6)
-        docs.unpersist()
-
-    # tabular legs
-    for n in (2_000_000, 8_000_000):
-        tab = spark.range(n, numPartitions=48).select(
-            i.alias("k"),
-            F.concat(F.lit("cat"), (i % 100_000).cast("string")).alias("cat"),
-            (i % 97).alias("y"),
-            (i % 150).alias("v"),
-            (i % 1_000_000).alias("fk"),
-        ).cache()
-        tab.count()
-        best = timed_call(lambda d=tab: target_encode(d, "cat", "y"))
-        emit("target_encode", n, best, "us_per_row", best / n * 1e6)
-        dim = spark.range(1_000_000, numPartitions=16).select(i.alias("dk"))
-        best = timed_call(
-            lambda d=tab, dm=dim: check_constraints(
-                d, not_null=["cat"], unique=[["k"]],
-                ranges=[("v", 0, 100)], ref=("fk", dm, "dk"),
-            )
-        )
-        emit("check_constraints", n, best, "us_per_row", best / n * 1e6)
-        ch = spark.range(n // 10, numPartitions=48).select(
-            (i * 10 % n).alias("k"),
-            F.when(i % 5 == 0, F.lit("D")).otherwise(F.lit("U")).alias("op"),
-            i.alias("seq"),
-            F.concat(F.lit("c"), i.cast("string")).alias("cat"),
-            (i % 97).alias("y"),
-            (i % 150).alias("v"),
-            (i % 1_000_000).alias("fk"),
-        )
-        best = timed_call(lambda s=tab, c=ch: apply_changes(s, c, "k"))
-        emit("cdc_apply", n, best, "us_per_row", best / n * 1e6)
-        tab.unpersist()
-
-
-def run_round6g_legs(spark) -> None:
-    """Session-3 batch 3 at 4x scale: bbox overlap join (reference-point
-    dedup-free), within-radius geofence join, and robust MAD outliers."""
-    import time as _time
-
-    from pyspark.sql import functions as F
-
-    from geoharvest_spark.joins import bbox_overlap_join, within_radius_join
-    from geoharvest_spark.profile import robust_outliers
-
-    i = F.col("id")
-
-    def emit(workload, n, sec, unit, per, **kw):
-        row = {"workload": workload, "rows": n, "sec": round(sec, 3),
-               unit: round(per, 4)}
-        row.update(kw)
-        print(json.dumps(row), flush=True)
-
-    for n_rect in (250_000, 1_000_000):
-        cx = (i * 7919 % 6000) / 100.0 - 30.0
-        cy = (i * 104729 % 4000) / 100.0 - 20.0
-        hw = (i % 5) / 20.0 + 0.05
-        hh = (i % 3) / 20.0 + 0.05
-        la = spark.range(0, n_rect * 2, 2, 48).select(
-            i.alias("lid"), (cx - hw).alias("w"), (cx + hw).alias("e"),
-            (cy - hh).alias("s"), (cy + hh).alias("n"))
-        rb = spark.range(1, n_rect * 2, 2, 48).select(
-            i.alias("rid"), (cx - hw * 1.3).alias("w"),
-            (cx + hw * 1.3).alias("e"),
-            (cy - hh).alias("s"), (cy + hh).alias("n"))
-        jd = bbox_overlap_join(la, rb, res=8)
-        t0 = _time.perf_counter()
-        n_pairs = jd.count()
-        el = _time.perf_counter() - t0
-        emit("bbox_overlap_join", n_rect * 2, el, "us_per_box",
-             el / (n_rect * 2) * 1e6, pairs=n_pairs)
-
-    sites = spark.range(1000, numPartitions=4).select(
-        i.alias("site_id"),
-        ((i * 137 % 34000) / 100.0 - 170.0).alias("lon"),
-        ((i * 73 % 16000) / 100.0 - 80.0).alias("lat"),
-    )
-    for n_pts in (2_000_000, 8_000_000):
-        pts = spark.range(n_pts, numPartitions=48).select(
-            i.alias("point_id"),
-            ((i * 7919 % 36000) / 100.0 - 180.0).alias("lon"),
-            ((i * 104729 % 18000) / 100.0 - 90.0).alias("lat"),
-        )
-        jd = within_radius_join(pts, sites, 100_000, res=5)
-        t0 = _time.perf_counter()
-        n_pairs = jd.count()
-        el = _time.perf_counter() - t0
-        emit("within_radius_join", n_pts, el, "us_per_point",
-             el / n_pts * 1e6, pairs=n_pairs)
-
-    for n in (2_000_000, 8_000_000):
-        ev = spark.range(n, numPartitions=48).select(
-            i.alias("event_id"),
-            F.concat(F.lit("t"), (i % 40).cast("string")).alias("event_type"),
-            ((i * 37) % 50 + F.when(i % 97 == 0, 5000).otherwise(0)).alias("v"),
-        ).cache()
-        ev.count()
-        best = None
-        for _ in range(2):
-            t0 = _time.perf_counter()
-            robust_outliers(ev, "event_type", "v").write.format(
-                "noop").mode("overwrite").save()
-            el = _time.perf_counter() - t0
-            best = el if best is None else min(best, el)
-        emit("robust_outliers", n, best, "us_per_row", best / n * 1e6)
-        ev.unpersist()
-
-
-def run_round7_legs(spark) -> None:
-    """Round-7: per-unit headroom for the two largest webtext bench legs
-    (VERDICT r6 'What's missing' #2) — substring span dedup and spatial
-    DBSCAN at bench volume and 4x it. Flat/falling per-unit cost = the
-    plan is linear (no hidden quadratic at scale)."""
-    import shutil
-    import tempfile
-    import time as _time
-
-    from pyspark.sql import functions as F
-
-    from geoharvest_spark.clustering import dbscan
-    from geoharvest_spark.textops import substring_span_dedup
-
-    def emit(workload, n, sec, unit, per, **kw):
-        row = {"workload": workload, "rows": n, "sec": round(sec, 3),
-               unit: round(per, 4)}
-        row.update(kw)
-        print(json.dumps(row), flush=True)
-
-    # substring span dedup: parquet-backed corpus like the bench leg
-    # (vary volume, keep doc shape fixed: ~25M grams at 250k docs)
-    for n_docs in (250_000, 1_000_000):
-        d = tempfile.mkdtemp(prefix="headroom_docs_")
-        try:
-            synth_docs(spark, n_docs).write.mode("overwrite").parquet(d)
-            docs = spark.read.parquet(d)
-            t0 = _time.perf_counter()
-            substring_span_dedup(docs, k=8, emit_clean=False).write.format(
-                "noop"
-            ).mode("overwrite").save()
-            el = _time.perf_counter() - t0
-            emit("substring_span_dedup", n_docs, el, "us_per_doc",
-                 el / n_docs * 1e6)
-        finally:
-            shutil.rmtree(d, True)
-
-    # DBSCAN: planted-cluster grid scaled at CONSTANT density (points
-    # per cluster and eps-neighborhood population fixed) so per-point
-    # cost isolates the plan, not the neighborhood size
-    for n_pts, n_clusters, side in ((200_000, 4096, 64), (800_000, 16384, 128)):
-        i = F.col("id")
-        pts = spark.range(n_pts).select(
-            i,
-            ((i % n_clusters % side) * 4
-             + ((i * 13) % 90) / F.lit(100.0) - 0.45).alias("x"),
-            (F.expr(f"(id % {n_clusters}) div {side}") * 4
-             + ((i * 17) % 90) / F.lit(100.0) - 0.45).alias("y"),
-        )
-        t0 = _time.perf_counter()
-        dbscan(pts, eps=0.5, min_pts=4).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        el = _time.perf_counter() - t0
-        spark.catalog.clearCache()  # dbscan caches pairs/core internally
-        emit("dbscan", n_pts, el, "us_per_point", el / n_pts * 1e6,
-             clusters=n_clusters)
-
-
-def run_round7b_legs(spark) -> None:
-    """Round-7 batch-2 operators at 4x volume: redirect doubling,
-    CDC chunking, interval overlap join, polygon rasterization."""
-    import shutil
-    import tempfile
-    import time as _time
-
-    from pyspark.sql import functions as F
-
-    from geoharvest_spark.geo import rasterize_polygon_cells
-    from geoharvest_spark.joins import interval_overlap_join
-    from geoharvest_spark.textops import cdc_chunk_dedup
-    from geoharvest_spark.webops import resolve_redirect_chains
-
-    def emit(workload, n, sec, unit, per, **kw):
-        row = {"workload": workload, "rows": n, "sec": round(sec, 3),
-               unit: round(per, 4)}
-        row.update(kw)
-        print(json.dumps(row), flush=True)
-
-    i = F.col("id")
-
-    # redirect chains: fixed length-16 chains (4 doubling rounds at any
-    # volume) -> per-edge cost must fall as edges grow
-    for n_edges in (1_000_000, 4_000_000):
-        ed = spark.range(n_edges, numPartitions=48).where(
-            i % 16 != 0
-        ).select(
-            F.concat(F.lit("u"), i).alias("src"),
-            F.concat(F.lit("u"), i - 1).alias("dst"),
-        )
-        t0 = _time.perf_counter()
-        resolve_redirect_chains(ed, max_rounds=8).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        el = _time.perf_counter() - t0
-        emit("redirect_chains", n_edges, el, "us_per_edge",
-             el / n_edges * 1e6, chain_len=16)
-
-    # CDC chunking: parquet-backed corpus like the bench legs
-    for n_docs in (250_000, 1_000_000):
-        d = tempfile.mkdtemp(prefix="cdc_docs_")
-        try:
-            synth_docs(spark, n_docs).write.mode("overwrite").parquet(d)
-            docs = spark.read.parquet(d)
-            t0 = _time.perf_counter()
-            cdc_chunk_dedup(docs, window=8, boundary_bits=4).write.format(
-                "noop"
-            ).mode("overwrite").save()
-            el = _time.perf_counter() - t0
-            emit("cdc_chunk_dedup", n_docs, el, "us_per_doc",
-                 el / n_docs * 1e6)
-        finally:
-            shutil.rmtree(d, True)
-
-    # interval overlap: constant density (expected pairs linear in n)
-    for n_iv in (500_000, 2_000_000):
-        domain = n_iv * 100  # keeps pairs/interval constant across legs
-        la = spark.range(n_iv, numPartitions=48).select(
-            i.alias("lid"), ((i * 37) % domain).alias("s"),
-            ((i * 37) % domain + i % 200 + 1).alias("e"))
-        rb = spark.range(n_iv, numPartitions=48).select(
-            i.alias("rid"), ((i * 53 + 11) % domain).alias("s"),
-            ((i * 53 + 11) % domain + i % 300 + 1).alias("e"))
-        jd = interval_overlap_join(la, rb, bucket=256)
-        t0 = _time.perf_counter()
-        n_pairs = jd.count()
-        el = _time.perf_counter() - t0
-        emit("interval_overlap_join", n_iv * 2, el, "us_per_interval",
-             el / (n_iv * 2) * 1e6, pairs=n_pairs)
-
-    # polygon rasterization: fixed pentagon (~1460 cells each) -> cost
-    # linear in total covered cells
-    offs = [(4501, 3), (1353, 4255), (-3599, 2603), (-3601, -2601),
-            (1355, -4251)]
-    for n_poly in (2_000, 8_000):
-        k = F.col("id")
-        cx = ((k * 137) % 280 - 140) * 512
-        cy = ((k * 73) % 120 - 60) * 512
-        verts = F.expr(
-            "array(" + ",".join(
-                f"named_struct('x', CAST(_cx + {dx} AS BIGINT), "
-                f"'y', CAST(_cy + {dy} AS BIGINT))"
-                for dx, dy in offs
-            ) + ")"
-        )
-        polys = spark.range(n_poly, numPartitions=48).select(
-            k.alias("poly_id"), cx.alias("_cx"), cy.alias("_cy")
-        ).select("poly_id", verts.alias("vertices"))
-        cells = rasterize_polygon_cells(polys, res=7)
-        t0 = _time.perf_counter()
-        n_cells = cells.count()
-        el = _time.perf_counter() - t0
-        emit("rasterize_polygons", n_poly, el, "us_per_cell",
-             el / max(n_cells, 1) * 1e6, cells=n_cells)
-
-
-def run_round7c_legs(spark) -> None:
-    """Round-7 batch-3: convex hulls, exact polygon overlay, KS drift,
-    join-size census at 4x volume."""
-    import time as _time
-
-    from pyspark.sql import functions as F
-
-    from geoharvest_spark.geo import (
-        group_convex_hulls,
-        polygon_intersection_area,
-    )
-    from geoharvest_spark.profile import join_size_census, ks_statistic
-
-    def emit(workload, n, sec, unit, per, **kw):
-        row = {"workload": workload, "rows": n, "sec": round(sec, 3),
-               unit: round(per, 4)}
-        row.update(kw)
-        print(json.dumps(row), flush=True)
-
-    i = F.col("id")
-
-    # hulls: fixed points/group (applyInPandas cost linear in points)
-    for n_pts in (2_000_000, 8_000_000):
-        pts = spark.range(n_pts, numPartitions=48).select(
-            (i % (n_pts // 2000)).alias("group_id"),
-            ((i * i * 7 + i) % 200001 - 100000).alias("x"),
-            ((i * i * 13 + 5 * i) % 160001 - 80000).alias("y"),
-        )
-        t0 = _time.perf_counter()
-        group_convex_hulls(pts).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        el = _time.perf_counter() - t0
-        emit("convex_hulls", n_pts, el, "us_per_point", el / n_pts * 1e6,
-             groups=n_pts // 2000)
-
-    # overlay: pairs scale, pentagon x rectangle
-    offs = [(4501, 3), (1353, 4255), (-3599, 2603), (-3601, -2601),
-            (1355, -4251)]
-    subj = F.expr(
-        "array(" + ",".join(
-            f"named_struct('x', CAST(_cx + {dx} AS BIGINT), "
-            f"'y', CAST(_cy + {dy} AS BIGINT))"
-            for dx, dy in offs
-        ) + ")"
-    )
-    rect = F.expr(
-        "array(named_struct('x', _x0, 'y', _y0),"
-        "named_struct('x', _x0 + 6144, 'y', _y0),"
-        "named_struct('x', _x0 + 6144, 'y', _y0 + 4096),"
-        "named_struct('x', _x0, 'y', _y0 + 4096))"
-    )
-    for n_pairs in (20_000, 80_000):
-        pairs = spark.range(n_pairs, numPartitions=48).select(
-            i.alias("lid"), i.alias("rid"),
-            ((i * 137 % 340 - 170) * 512).alias("_cx"),
-            ((i * 73 % 160 - 80) * 512).alias("_cy"),
-            ((i * 137 % 340 - 170) * 512 - 2048 + (i % 7) * 512).alias("_x0"),
-            ((i * 73 % 160 - 80) * 512 - 1024 + (i % 5) * 512).alias("_y0"),
-        ).select("lid", "rid", subj.alias("subject"), rect.alias("clip"))
-        t0 = _time.perf_counter()
-        polygon_intersection_area(pairs).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        el = _time.perf_counter() - t0
-        emit("polygon_overlay", n_pairs, el, "us_per_pair",
-             el / n_pairs * 1e6)
-
-    # KS: value domain fixed (distinct-value window constant), rows grow
-    for n in (4_000_000, 16_000_000):
-        l = spark.range(n, numPartitions=48).select(((i * 37) % 1000).alias("v"))
-        r = spark.range(n, numPartitions=48).select(
-            (((i * 37) % 1000) + i % 5).alias("v"))
-        t0 = _time.perf_counter()
-        ks_statistic(l, r, "v").collect()
-        el = _time.perf_counter() - t0
-        emit("ks_statistic", 2 * n, el, "us_per_row", el / (2 * n) * 1e6)
-
-    # join-size census: count tables only, never the join
-    for n in (4_000_000, 16_000_000):
-        l = spark.range(n, numPartitions=48).select((i % 100000).alias("k"))
-        r = spark.range(n, numPartitions=48).select(((i * 7) % 120000).alias("k"))
-        t0 = _time.perf_counter()
-        join_size_census(l, r, "k").collect()
-        el = _time.perf_counter() - t0
-        emit("join_size_census", 2 * n, el, "us_per_row", el / (2 * n) * 1e6)

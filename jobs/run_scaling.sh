@@ -22,7 +22,7 @@
 #   On a real cluster 4N executors bring 4N memory controllers, so the
 #   mem-normalized column is the cluster-relevant number.
 set -e
-cd /root/repo
+cd "$(dirname "$0")/.."
 N=${1:-2}
 N4=$((N * 4))
 SF=${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1}

@@ -14,9 +14,10 @@ available and exits (the batch-equivalent incremental run).
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from geoharvest_spark.session import get_spark  # noqa: E402
 from geoharvest_spark.streaming import (  # noqa: E402

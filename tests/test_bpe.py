@@ -310,3 +310,19 @@ def test_bpe_dispatch_consistent_vs_not(spark):
     )
     assert a["n_tokens_bpe"].tolist()[:1] == b["n_tokens_bpe"].tolist()[:1]
     assert pd.isna(a["n_tokens_bpe"][1]) and pd.isna(b["n_tokens_bpe"][1])
+
+
+def test_bpe_repeated_merge_pair_is_inconsistent(spark):
+    """A merge table that repeats a pair fails the consistency gate: the
+    rank dict keeps the pair's LAST rank while the replace chain applies
+    it FIRST. On "abcd" the chain merges ab, then cd (2 tokens); rank-dict
+    order would merge bc first (3 tokens). The gate must keep the chain."""
+    dup = [("a", "b"), ("b", "c"), ("c", "d"), ("a", "b")]
+    assert not bpe.trained_consistent(dup)
+    df = spark.createDataFrame([(0, "abcd")], ["doc_id", "text"])
+    got = bpe.with_bpe_token_count(df, dup).first()["n_tokens_bpe"]
+    chain = (
+        bpe.with_bpe_token_count(df, dup, force_codegen=True)
+        .first()["n_tokens_bpe"]
+    )
+    assert got == chain == 2

@@ -3,10 +3,14 @@ right stage, accounting is monotonic, and the run is deterministic."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
 from geoharvest_spark.curation import CurationConfig, curate
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 N = 2_000
 
@@ -15,7 +19,7 @@ N = 2_000
 def pages(spark):
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO)
     from jobs.webtext_pipeline import synth_pages
 
     return synth_pages(spark, N).cache()
@@ -25,7 +29,7 @@ def pages(spark):
 def bench(spark):
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO)
     from jobs.headroom import synth_docs
 
     return (

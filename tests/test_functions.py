@@ -78,3 +78,60 @@ def test_python_xxh64_matches_spark(spark):
     got = [r[0] for r in df.select(F.xxhash64("w1", "w2")).collect()]
     exp = [spark_xxhash64_strings(a, b) for a, b in rows]
     assert got == exp
+
+
+def test_latest_per_key_subsecond_and_far_future(spark, tmp_path):
+    """A4 last-event-wins on the shapes a whole-second packed key gets
+    wrong: (a) two events in one second where the LATER one has the LOWER
+    event_id, (b) a timestamp past 2106-02-07 (epoch seconds >= 2^32).
+    The driver query a4 and latest_per_key must both pick the later event,
+    exactly as the query's DuckDB oracle does."""
+    import datetime as dt
+    import os
+    import sys
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    import __spark_entry__ as E
+
+    t0 = dt.datetime(2024, 1, 1)
+    rows = [  # (event_id, ts, user_id, event_type)
+        (10, t0 + dt.timedelta(microseconds=900_000), 1, "late"),
+        (11, t0 + dt.timedelta(microseconds=100_000), 1, "early"),
+        (20, dt.datetime(2150, 6, 1), 2, "future"),
+        (21, dt.datetime(2024, 5, 1), 2, "now"),
+        (30, t0, 3, "tie_low"),
+        (31, t0, 3, "tie_high"),
+        (40, t0, 4, "only"),
+    ]
+    ids, ts, users, kinds = (list(c) for c in zip(*rows))
+    table = pa.table({
+        "event_id": pa.array(ids, pa.int64()),
+        "ts": pa.array(ts, pa.timestamp("us")),
+        "user_id": pa.array(users, pa.int64()),
+        "event_type": pa.array(kinds, pa.string()),
+    })
+    pq.write_table(table, str(tmp_path / "events.parquet"))
+    want = [(1, 10, "late"), (2, 20, "future"), (3, 31, "tie_high"), (4, 40, "only")]
+
+    got = [
+        tuple(r)
+        for r in E.queries()["a4_last_event_per_key"](spark, str(tmp_path)).collect()
+    ]
+    assert got == want
+
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM '{tmp_path}/events.parquet'")
+    assert con.execute(E.oracle_sql()["a4_last_event_per_key"]).fetchall() == want
+
+    ev = spark.read.parquet(str(tmp_path / "events.parquet"))
+    out = gfn.latest_per_key(
+        ev, ["user_id"], [F.col("ts").desc(), F.col("event_id").desc()]
+    )
+    assert out.columns == ev.columns
+    assert [
+        (r.user_id, r.event_id, r.event_type) for r in out.orderBy("user_id").collect()
+    ] == want

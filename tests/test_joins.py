@@ -320,52 +320,6 @@ def test_interval_overlap_join_exactly_once(spark):
         assert got == want, bucket
 
 
-def test_pip_codegen_refine_equals_arrow(spark, points_df):
-    """r8: the unrolled codegen ray cast must be bit-identical to the
-    Arrow kernel (same IEEE operand order), and the auto gate must pick
-    it for simple rings. Polygons >10 ring points fall back to Arrow."""
-    from geoharvest_spark.joins import _pip_all_simple
-
-    pts, _ = points_df
-    polys = polygons_df(spark, 120)
-    assert _pip_all_simple(polys)  # synth rings are <= 10 points
-    a = {
-        (r.point_id, r.poly_id)
-        for r in pip_join(pts, polys, res=5, codegen_refine=True)
-        .select("point_id", "poly_id").collect()
-    }
-    b = {
-        (r.point_id, r.poly_id)
-        for r in pip_join(pts, polys, res=5, codegen_refine=False)
-        .select("point_id", "poly_id").collect()
-    }
-    assert a == b and len(a) > 50
-    # the codegen plan must carry no Python boundary at all
-    plan = (
-        pip_join(pts, polys, res=5, codegen_refine=True)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
-    spark.catalog.clearCache()
-
-
-def test_pip_all_simple_gates_complex_wkt(spark):
-    from geoharvest_spark.joins import _pip_all_simple
-
-    multi = spark.createDataFrame(
-        [("p0", "MULTIPOLYGON (((0 0, 1 0, 1 1, 0 0)), ((2 2, 3 2, 3 3, 2 2)))")],
-        "poly_id string, wkt string",
-    )
-    assert not _pip_all_simple(multi)
-    big_ring = "POLYGON ((" + ", ".join(
-        f"{i} {i % 3}" for i in range(15)
-    ) + ", 0 0))"
-    big = spark.createDataFrame(
-        [("p1", big_ring)], "poly_id string, wkt string"
-    )
-    assert not _pip_all_simple(big)
-
-
 def test_interval_overlap_exact_buckets_negative_and_huge(spark):
     """r8 (ADVICE r7): bucket ids are exact integer floor division — the
     old double-division form mis-bucketed endpoints past 2^53 and the

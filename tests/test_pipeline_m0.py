@@ -2,9 +2,13 @@
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from geoharvest_spark.pipeline import cell_counts, pages_to_cells
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_pages_to_cells_has_rows(pages_small):
@@ -32,7 +36,9 @@ def test_cell_counts_aggregate(pages_small):
 def test_entry_contract(spark):
     import importlib.util
 
-    spec = importlib.util.spec_from_file_location("entry_mod", "/root/repo/__spark_entry__.py")
+    spec = importlib.util.spec_from_file_location(
+        "entry_mod", os.path.join(REPO, "__spark_entry__.py")
+    )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     df = mod.entry(spark)

@@ -10,6 +10,8 @@ salt buckets.
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -18,6 +20,8 @@ from pyspark.sql import functions as F
 from geoharvest_spark import index as ix
 from geoharvest_spark.joins import pip_join
 from geoharvest_spark.synth import polygons_pdf
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 @pytest.fixture(scope="module")
@@ -91,7 +95,7 @@ def test_contract_skew_census_bounds_max_task(spark):
     counts)."""
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO)
     import __spark_entry__ as E
     from tests.conftest import SF001
 
@@ -119,7 +123,7 @@ def test_contract_skew_join_parity_vs_unsalted(spark):
     on the same pathological input (salting never changes results)."""
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO)
     import __spark_entry__ as E
     from tests.conftest import SF001
 
