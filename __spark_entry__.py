@@ -4746,6 +4746,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         independent bit-by-bit morton3 + the same ranges + the exact
         filter."""
         from geoharvest_spark.index import (
+            ghcell_xy,
             morton3_key,
             zrange3_decompose,
             zrange3_predicate,
@@ -4763,18 +4764,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 / F.lit(86400)
             ).cast("long").alias("day"),
         )
-        xcol = F.least(
-            F.greatest(
-                F.floor((F.col("lon") + 180.0) / 360.0 * 512.0), F.lit(0)
-            ),
-            F.lit(511),
-        ).cast("long")
-        ycol = F.least(
-            F.greatest(
-                F.floor((F.col("lat") + 90.0) / 180.0 * 256.0), F.lit(0)
-            ),
-            F.lit(255),
-        ).cast("long")
+        xcol, ycol = ghcell_xy(F.col("lon"), F.col("lat"), 6)  # 512 x 256
         keyed = pts.select(
             "point_id", "lon", "lat", "day",
             morton3_key(xcol, ycol, F.col("day")).alias("zk3"),

@@ -352,7 +352,7 @@ def idw_fill(
     """
     if radius != 2:
         raise ValueError("idw_fill currently supports radius=2 (w=4/d^2)")
-    from .index import GHCELL_RES_BITS, GHCELL_X_BITS, ghcell, ghcell_decode, ghcell_nx, ghcell_ny
+    from .index import ghcell, ghcell_decode, ghcell_from_xy, ghcell_nx, ghcell_ny
 
     nx, ny = ghcell_nx(res), ghcell_ny(res)
     obs = (
@@ -401,11 +401,7 @@ def idw_fill(
         (F.col("tx") >= 0) & (F.col("tx") < nx)
         & (F.col("ty") >= 0) & (F.col("ty") < ny)
     )
-    tcell = (
-        F.lit(res).cast("long") * F.lit(GHCELL_RES_BITS)
-        + F.col("tx").cast("long") * F.lit(GHCELL_X_BITS)
-        + F.col("ty").cast("long")
-    ).alias("cell")
+    tcell = ghcell_from_xy(F.col("tx"), F.col("ty"), res).alias("cell")
     filled = (
         cand.select(tcell, "w", "sv")
         .groupBy("cell")
@@ -461,7 +457,7 @@ def rasterize_polygon_cells(
     if res != 7:
         raise ValueError("rasterize_polygon_cells: 512-scale is exact "
                          "for res=7 only (nx=1024, ny=512)")
-    from .index import GHCELL_RES_BITS, GHCELL_X_BITS
+    from .index import ghcell_from_xy
 
     v = F.col(vertices_col)
     xs = F.transform(v, lambda p: p["x"])
@@ -511,11 +507,7 @@ def rasterize_polygon_cells(
         )
     )
     inside = crossings % 2 == 1
-    cell = (
-        F.lit(res).cast("long") * F.lit(GHCELL_RES_BITS)
-        + F.col("cell_x").cast("long") * F.lit(GHCELL_X_BITS)
-        + F.col("cell_y").cast("long")
-    )
+    cell = ghcell_from_xy(F.col("cell_x"), F.col("cell_y"), res)
     return cand.where(inside).select(
         F.col(id_col), cell.alias("cell"), "cell_x", "cell_y"
     )
@@ -578,6 +570,7 @@ def path_cells(
     from .index import ghcell, ghcell_nx, ghcell_ny
 
     nx, ny = ghcell_nx(res), ghcell_ny(res)
+    # unclamped floor, not ghcell_xy: N is the DDA spec's raw cell span
     x0 = F.floor((F.col("lon0") + 180.0) / 360.0 * F.lit(float(nx)))
     x1 = F.floor((F.col("lon1") + 180.0) / 360.0 * F.lit(float(nx)))
     y0 = F.floor((F.col("lat0") + 90.0) / 180.0 * F.lit(float(ny)))

@@ -22,6 +22,12 @@ ghcell layout (res r in 0..15):
     nx = 8 * 2^r  columns over lon [-180, 180)
     ny = 4 * 2^r  rows    over lat [-90, 90]
     cell = r * 2^50 + x * 2^25 + y        (fits int64; x < 2^22, y < 2^21)
+
+This module is the only one that knows that layout: other modules go
+through ghcell / ghcell_xy / ghcell_from_xy / ghcell_decode /
+ghcell_center / explode_bbox_cells (and the numpy twins). The SQL text
+twins (ghcell_sql and the driver's oracle SQL) stay independent on
+purpose: they are the references the Column code is checked against.
 """
 
 from __future__ import annotations
@@ -54,23 +60,38 @@ def ghcell_ny(res: int) -> int:
     return 4 << res
 
 
-def ghcell(lon: Column, lat: Column, res: int) -> Column:
-    """Point -> ghcell id at resolution `res` as a BIGINT Column.
+def ghcell_xy(lon: Column, lat: Column, res: int) -> tuple[Column, Column]:
+    """Point -> clamped long grid coordinates (x, y) at resolution `res`.
 
-    Pure integer arithmetic; identical SQL runs on DuckDB (see
-    __spark_entry__.oracle_sql). Longitude wraps into [-180,180); latitude
-    clamps so lat=90 lands in the top row.
-    """
+    Out-of-range inputs clamp to the edge column/row, so lon=180 lands in
+    the last column and lat=90 in the top row."""
     nx, ny = ghcell_nx(res), ghcell_ny(res)
     x = F.floor((lon + F.lit(180.0)) / F.lit(360.0) * F.lit(float(nx)))
     y = F.floor((lat + F.lit(90.0)) / F.lit(180.0) * F.lit(float(ny)))
-    x = F.least(F.greatest(x, F.lit(0)), F.lit(nx - 1))
-    y = F.least(F.greatest(y, F.lit(0)), F.lit(ny - 1))
+    return (
+        F.least(F.greatest(x, F.lit(0)), F.lit(nx - 1)).cast("long"),
+        F.least(F.greatest(y, F.lit(0)), F.lit(ny - 1)).cast("long"),
+    )
+
+
+def ghcell_from_xy(x: Column, y: Column, res: int) -> Column:
+    """Grid coordinates (x, y) at `res` -> ghcell id (no range check)."""
     return (
         F.lit(res).cast("long") * F.lit(GHCELL_RES_BITS)
         + x.cast("long") * F.lit(GHCELL_X_BITS)
         + y.cast("long")
-    ).cast("long")
+    )
+
+
+def ghcell(lon: Column, lat: Column, res: int) -> Column:
+    """Point -> ghcell id at resolution `res` as a BIGINT Column.
+
+    Pure integer arithmetic; identical SQL runs on DuckDB (see
+    __spark_entry__.oracle_sql). Both axes clamp to the grid, so lon=180
+    lands in the last column and lat=90 in the top row.
+    """
+    x, y = ghcell_xy(lon, lat, res)
+    return ghcell_from_xy(x, y, res)
 
 
 def ghcell_sql(lon_expr: str, lat_expr: str, res: int) -> str:
@@ -102,10 +123,39 @@ def ghcell_parent(cell: Column, parent_res: int, child_res: int) -> Column:
     """Parent cell at coarser resolution (aperture-4: x>>k, y>>k)."""
     k = child_res - parent_res
     d = ghcell_decode(cell)
+    return ghcell_from_xy(
+        F.floor(d["x"] / F.lit(2**k)), F.floor(d["y"] / F.lit(2**k)), parent_res
+    )
+
+
+def ghcell_center(cell: Column, res: int) -> tuple[Column, Column]:
+    """Cell id at `res` -> (lon, lat) of its center as double Columns.
+
+    The step 45/2^res is an exact binary double, so ``(x + 0.5) * step -
+    180`` is exact and bit-identical to ghcell_center_np and to SQL."""
+    d = ghcell_decode(cell)
+    step_x = 360.0 / ghcell_nx(res)
+    step_y = 180.0 / ghcell_ny(res)
     return (
-        F.lit(parent_res).cast("long") * F.lit(GHCELL_RES_BITS)
-        + F.floor(d["x"] / F.lit(2**k)).cast("long") * F.lit(GHCELL_X_BITS)
-        + F.floor(d["y"] / F.lit(2**k)).cast("long")
+        (d["x"] + F.lit(0.5)) * F.lit(step_x) - F.lit(180.0),
+        (d["y"] + F.lit(0.5)) * F.lit(step_y) - F.lit(90.0),
+    )
+
+
+def explode_bbox_cells(
+    df: DataFrame, w: Column, e: Column, s: Column, n: Column, res: int
+) -> DataFrame:
+    """One row per ghcell at `res` that the box [w, e] x [s, n] covers
+    (corners clamped to the grid), as a new ``cell`` column. Two
+    sequence() explodes, so the cover stays JVM-side; w <= e and s <= n
+    (no antimeridian crossing)."""
+    x0, y0 = ghcell_xy(w, s, res)
+    x1, y1 = ghcell_xy(e, n, res)
+    return (
+        df.withColumn("_x", F.explode(F.sequence(x0, x1)))
+        .withColumn("_y", F.explode(F.sequence(y0, y1)))
+        .withColumn("cell", ghcell_from_xy(F.col("_x"), F.col("_y"), res))
+        .drop("_x", "_y")
     )
 
 
@@ -117,14 +167,19 @@ def ghcell_np(lon: np.ndarray, lat: np.ndarray, res: int) -> np.ndarray:
     return res * GHCELL_RES_BITS + x * GHCELL_X_BITS + y
 
 
+def ghcell_decode_np(cells) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """numpy twin of ghcell_decode: cell ids -> (res, x, y) int64 arrays."""
+    cells = np.asarray(cells, dtype=np.int64)
+    rem = cells % GHCELL_RES_BITS
+    return cells // GHCELL_RES_BITS, rem // GHCELL_X_BITS, rem % GHCELL_X_BITS
+
+
 def ghcell_kring_np(cell: int, k: int) -> list[int]:
     """All cells within Chebyshev distance k (x wraps around the antimeridian,
     y clamps at the poles). Driver-side helper for kNN ring expansion — the
     ring set per query is tiny and is shipped as an exploded candidate table.
     """
-    res = int(cell // GHCELL_RES_BITS)
-    rem = int(cell % GHCELL_RES_BITS)
-    x, y = rem // GHCELL_X_BITS, rem % GHCELL_X_BITS
+    res, x, y = (int(v) for v in ghcell_decode_np(cell))
     nx, ny = ghcell_nx(res), ghcell_ny(res)
     out = set()
     for dx in range(-k, k + 1):
@@ -139,10 +194,7 @@ def ghcell_kring_np(cell: int, k: int) -> list[int]:
 
 def ghcell_center_np(cells: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """Cell id -> (lon, lat) center."""
-    cells = np.asarray(cells, dtype=np.int64)
-    res = cells // GHCELL_RES_BITS
-    rem = cells % GHCELL_RES_BITS
-    x, y = rem // GHCELL_X_BITS, rem % GHCELL_X_BITS
+    res, x, y = ghcell_decode_np(cells)
     nx = (8 << res).astype(np.float64)
     ny = (4 << res).astype(np.float64)
     lon = (x + 0.5) / nx * 360.0 - 180.0
@@ -507,12 +559,7 @@ def zorder_key(lon: Column, lat: Column, res: int = 12) -> Column:
     grid, not a new index."""
     if not 0 <= res <= 13:
         raise ValueError(f"zorder res must be in [0, 13], got {res}")
-    nx, ny = ghcell_nx(res), ghcell_ny(res)
-    x = F.floor((lon + F.lit(180.0)) / F.lit(360.0) * F.lit(float(nx)))
-    y = F.floor((lat + F.lit(90.0)) / F.lit(180.0) * F.lit(float(ny)))
-    x = F.least(F.greatest(x, F.lit(0)), F.lit(nx - 1))
-    y = F.least(F.greatest(y, F.lit(0)), F.lit(ny - 1))
-    return morton_key(x, y)
+    return morton_key(*ghcell_xy(lon, lat, res))
 
 
 def morton_sql(x_expr: str, y_expr: str) -> str:
@@ -701,10 +748,11 @@ def zrange_sql_predicate(
 
 
 def ghcell_neighbors(cell: Column, res: int) -> Column:
-    """Array of the 3x3 neighborhood cell ids (edge cells emit fewer;
-    longitude does NOT wrap — the grid is a flat lattice here, matching
-    ghcell_kring_np). Pure codegen: decode -> 9 candidate (x, y) -> filter
-    in-range -> re-encode."""
+    """Array of the 3x3 neighborhood cell ids (edge cells emit fewer).
+    Both axes clamp: longitude does NOT wrap here, unlike
+    ghcell_kring_np, which wraps x around the antimeridian (the
+    cell_heat_smooth oracle pins this flat-lattice behavior). Pure
+    codegen: decode -> 9 candidate (x, y) -> filter in-range -> re-encode."""
     nx, ny = ghcell_nx(res), ghcell_ny(res)
     d = ghcell_decode(cell)
     cands = F.array(
@@ -723,12 +771,7 @@ def ghcell_neighbors(cell: Column, res: int) -> Column:
         & (p["y"] >= 0)
         & (p["y"] < ny),
     )
-    return F.transform(
-        valid,
-        lambda p: F.lit(res).cast("long") * F.lit(GHCELL_RES_BITS)
-        + p["x"] * F.lit(GHCELL_X_BITS)
-        + p["y"],
-    )
+    return F.transform(valid, lambda p: ghcell_from_xy(p["x"], p["y"], res))
 
 
 def smooth_cell_counts(counts: DataFrame, res: int, weight: int = 1) -> DataFrame:

@@ -50,45 +50,10 @@ def polygon_cover_cells(polygons: DataFrame, res: int) -> DataFrame:
     arithmetic — the per-row cell list is built with sequence() so the whole
     thing stays JVM-side.
     """
-    nx, ny = ix.ghcell_nx(res), ix.ghcell_ny(res)
-    x0 = F.least(
-        F.greatest(
-            F.floor((F.col("bbox.w") + 180.0) / 360.0 * nx), F.lit(0)
-        ),
-        F.lit(nx - 1),
+    bbox = F.col("bbox")
+    return ix.explode_bbox_cells(
+        polygons, bbox["w"], bbox["e"], bbox["s"], bbox["n"], res
     )
-    x1 = F.least(
-        F.greatest(
-            F.floor((F.col("bbox.e") + 180.0) / 360.0 * nx), F.lit(0)
-        ),
-        F.lit(nx - 1),
-    )
-    y0 = F.least(
-        F.greatest(
-            F.floor((F.col("bbox.s") + 90.0) / 180.0 * ny), F.lit(0)
-        ),
-        F.lit(ny - 1),
-    )
-    y1 = F.least(
-        F.greatest(
-            F.floor((F.col("bbox.n") + 90.0) / 180.0 * ny), F.lit(0)
-        ),
-        F.lit(ny - 1),
-    )
-    df = (
-        polygons.withColumn("_x", F.explode(F.sequence(x0, x1)))
-        .withColumn("_y", F.explode(F.sequence(y0, y1)))
-        .withColumn(
-            "cell",
-            (
-                F.lit(res).cast("long") * F.lit(ix.GHCELL_RES_BITS)
-                + F.col("_x").cast("long") * F.lit(ix.GHCELL_X_BITS)
-                + F.col("_y").cast("long")
-            ),
-        )
-        .drop("_x", "_y")
-    )
-    return df
 
 
 # per-worker parsed-polygon cache: persists across batches AND (with
@@ -246,10 +211,7 @@ def _ring_guard_m(
 
     nx, ny = ix.ghcell_nx(res), ix.ghcell_ny(res)
     deg_x, deg_y = 360.0 / nx, 180.0 / ny
-    cells = ix.ghcell_np(lon, lat, res)
-    rem = cells % ix.GHCELL_RES_BITS
-    x = rem // ix.GHCELL_X_BITS
-    y = rem % ix.GHCELL_X_BITS
+    _, x, y = ix.ghcell_decode_np(ix.ghcell_np(lon, lat, res))
     lat_r = np.radians(lat)
 
     y_lo, y_hi = y - ring, y + ring
@@ -379,7 +341,6 @@ def knn_join(
         ix.ghcell(F.col("lon"), F.col("lat"), res).alias("cell"),
     )
 
-    out_cols = ["qid", "point_id", "rank", "dist_m"]
     results = []
     pending = q
     for mult in (1, *escalations):
@@ -396,23 +357,25 @@ def knn_join(
 
     if pending is not None:
         # final exact pass for anything still unresolved
-        w = Window.partitionBy("qid").orderBy(
-            F.col("dist_m").asc(), F.col("point_id")
-        )
-        brute = (
-            pending.crossJoin(p.drop("cell"))
-            .withColumn(
-                "dist_m",
-                haversine_m(
-                    F.col("q_lon"), F.col("q_lat"), F.col("p_lon"), F.col("p_lat")
-                ),
-            )
-            .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= F.col("_k"))
-            .select(*out_cols)
-        )
-        out = out.unionByName(brute)
+        out = out.unionByName(_knn_exact(pending, p.drop("cell")))
     return out
+
+
+def _knn_exact(q: DataFrame, p: DataFrame) -> DataFrame:
+    """Exact kNN of projected queries (qid, q_lon, q_lat, _k) over projected
+    points (point_id, p_lon, p_lat): cross join, haversine, rank <= _k.
+    Returns (qid, point_id, rank, dist_m)."""
+    w = Window.partitionBy("qid").orderBy(F.col("dist_m").asc(), F.col("point_id"))
+    return (
+        q.crossJoin(p)
+        .withColumn(
+            "dist_m",
+            haversine_m(F.col("q_lon"), F.col("q_lat"), F.col("p_lon"), F.col("p_lat")),
+        )
+        .withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= F.col("_k"))
+        .select("qid", "point_id", "rank", "dist_m")
+    )
 
 
 def as_of_join(
@@ -491,17 +454,7 @@ def knn_brute_force(
         F.col(point_key).alias("point_id"),
         F.col("lon").alias("p_lon"), F.col("lat").alias("p_lat"),
     )
-    w = Window.partitionBy("qid").orderBy(F.col("dist_m").asc(), F.col("point_id"))
-    return (
-        q.crossJoin(p)
-        .withColumn(
-            "dist_m",
-            haversine_m(F.col("q_lon"), F.col("q_lat"), F.col("p_lon"), F.col("p_lat")),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= F.col("_k"))
-        .select("qid", "point_id", "rank", "dist_m")
-    )
+    return _knn_exact(q, p)
 
 
 def within_radius_join(
@@ -533,16 +486,7 @@ def within_radius_join(
     Returns (point_key, site_key, dist_m) with dist_m floored to whole
     meters (order-free, SQL-replayable away from boundary ties).
     """
-    from .index import (
-        GHCELL_RES_BITS,
-        GHCELL_X_BITS,
-        ghcell,
-        ghcell_nx,
-        ghcell_ny,
-    )
-    from .geo import haversine_m
-
-    nx, ny = ghcell_nx(res), ghcell_ny(res)
+    nx, ny = ix.ghcell_nx(res), ix.ghcell_ny(res)
     cell_h_deg = 180.0 / ny
     cell_w_deg = 360.0 / nx
     # meridional: meters per degree latitude is ~constant (min 110574)
@@ -551,11 +495,9 @@ def within_radius_join(
         F.col(site_key),
         F.col("lon").alias("s_lon"),
         F.col("lat").alias("s_lat"),
-        ghcell(F.col("lon"), F.col("lat"), res).alias("_c"),
+        ix.ghcell(F.col("lon"), F.col("lat"), res).alias("_c"),
     )
-    rem = F.col("_c") % F.lit(GHCELL_RES_BITS)
-    x = (rem / F.lit(GHCELL_X_BITS)).cast("long")
-    y = (rem % F.lit(GHCELL_X_BITS)).cast("long")
+    c = ix.ghcell_decode(F.col("_c"))
     # zonal span at the ring's widest (pole-most) latitude edge; capped
     # at a full wrap so polar sites stay correct (their zone is tiny)
     edge_lat = F.least(
@@ -574,8 +516,8 @@ def within_radius_join(
         site_key,
         "s_lon",
         "s_lat",
-        x.alias("_x"),
-        y.alias("_y"),
+        c["x"].alias("_x"),
+        c["y"].alias("_y"),
         F.explode(F.sequence(-dx_span, dx_span)).alias("_dx"),
     ).select(
         site_key,
@@ -594,18 +536,15 @@ def within_radius_join(
         site_key,
         "s_lon",
         "s_lat",
-        (
-            F.lit(res).cast("long") * F.lit(GHCELL_RES_BITS)
-            + F.pmod(F.col("_x") + F.col("_dx"), F.lit(nx))
-            * F.lit(GHCELL_X_BITS)
-            + F.col("_ry")
+        ix.ghcell_from_xy(
+            F.pmod(F.col("_x") + F.col("_dx"), F.lit(nx)), F.col("_ry"), res
         ).alias("cell"),
     ).distinct()  # full-wrap spans revisit cells; dedup the tiny site ring
     p = points.select(
         F.col(point_key),
         F.col("lon").alias("p_lon"),
         F.col("lat").alias("p_lat"),
-        ghcell(F.col("lon"), F.col("lat"), res).alias("cell"),
+        ix.ghcell(F.col("lon"), F.col("lat"), res).alias("cell"),
     )
     d = F.floor(
         haversine_m(
@@ -646,56 +585,10 @@ def bbox_overlap_join(
     (plan-pinned). Shuffles key on the cell; skew from hot cells takes
     the same salting/AQE treatment as J3.
     """
-    from .index import (
-        GHCELL_RES_BITS,
-        GHCELL_X_BITS,
-        ghcell_nx,
-        ghcell_ny,
-    )
-
-    nx, ny = ghcell_nx(res), ghcell_ny(res)
-
-    def xcell(lon):
-        return F.least(
-            F.greatest(
-                F.floor((lon + F.lit(180.0)) / F.lit(360.0) * F.lit(float(nx))),
-                F.lit(0),
-            ),
-            F.lit(nx - 1),
-        ).cast("long")
-
-    def ycell(lat):
-        return F.least(
-            F.greatest(
-                F.floor((lat + F.lit(90.0)) / F.lit(180.0) * F.lit(float(ny))),
-                F.lit(0),
-            ),
-            F.lit(ny - 1),
-        ).cast("long")
-
     def cover(df, key, tag):
-        return df.select(
-            F.col(key),
-            F.col("w").alias(f"{tag}w"),
-            F.col("e").alias(f"{tag}e"),
-            F.col("s").alias(f"{tag}s"),
-            F.col("n").alias(f"{tag}n"),
-            F.explode(
-                F.sequence(xcell(F.col("w")), xcell(F.col("e")))
-            ).alias("_cx"),
-        ).select(
-            "*",
-            F.explode(
-                F.sequence(ycell(F.col(f"{tag}s")), ycell(F.col(f"{tag}n")))
-            ).alias("_cy"),
-        ).select(
-            F.col(key),
-            *[F.col(f"{tag}{c}") for c in "wesn"],
-            (
-                F.lit(res).cast("long") * F.lit(GHCELL_RES_BITS)
-                + F.col("_cx") * F.lit(GHCELL_X_BITS)
-                + F.col("_cy")
-            ).alias("cell"),
+        cells = ix.explode_bbox_cells(df, *[F.col(c) for c in "wesn"], res)
+        return cells.select(
+            F.col(key), *[F.col(c).alias(f"{tag}{c}") for c in "wesn"], "cell"
         )
 
     lc = cover(left, left_key, "a")
@@ -706,10 +599,10 @@ def bbox_overlap_join(
         & (F.col("as") <= F.col("bn"))
         & (F.col("bs") <= F.col("an"))
     )
-    ref_cell = (
-        F.lit(res).cast("long") * F.lit(GHCELL_RES_BITS)
-        + xcell(F.greatest(F.col("aw"), F.col("bw"))) * F.lit(GHCELL_X_BITS)
-        + ycell(F.greatest(F.col("as"), F.col("bs")))
+    ref_cell = ix.ghcell(
+        F.greatest(F.col("aw"), F.col("bw")),
+        F.greatest(F.col("as"), F.col("bs")),
+        res,
     )
     return (
         lc.join(rc, "cell")

@@ -211,9 +211,9 @@ def grid_density_clusters(
     per-point labels).
     """
     from .index import (
-        GHCELL_RES_BITS,
-        GHCELL_X_BITS,
         ghcell,
+        ghcell_decode,
+        ghcell_from_xy,
         ghcell_nx,
         ghcell_ny,
     )
@@ -226,9 +226,8 @@ def grid_density_clusters(
         .agg(F.count(F.lit(1)).alias("n_points"))
     )
     dense = cells.where(F.col("n_points") >= min_pts)
-    rem = F.col("cell") % F.lit(GHCELL_RES_BITS)
-    x = (rem / F.lit(GHCELL_X_BITS)).cast("long")
-    y = (rem % F.lit(GHCELL_X_BITS)).cast("long")
+    d = ghcell_decode(F.col("cell"))
+    x, y = d["x"], d["y"]
     # 4 of the 8 neighbor offsets — the symmetric half arrives from the
     # other endpoint's emission; x wraps (longitude), y clamps (poles)
     offsets = [(1, -1), (1, 0), (1, 1), (0, 1)]
@@ -248,11 +247,7 @@ def grid_density_clusters(
         .where((F.col("nb.ny") >= 0) & (F.col("nb.ny") < ny))
         .select(
             F.col("cell").alias("id_a"),
-            (
-                F.lit(res).cast("long") * F.lit(GHCELL_RES_BITS)
-                + F.col("nb.nx") * F.lit(GHCELL_X_BITS)
-                + F.col("nb.ny")
-            ).alias("id_b"),
+            ghcell_from_xy(F.col("nb.nx"), F.col("nb.ny"), res).alias("id_b"),
         )
         .join(
             dense.select(F.col("cell").alias("id_b")),
@@ -295,23 +290,9 @@ def radius_of_gyration(
 
     Returns (user, n_fixes, n_cells, rog2_cell2).
     """
-    from .index import ghcell_nx, ghcell_ny
+    from .index import ghcell_xy
 
-    nx, ny = ghcell_nx(res), ghcell_ny(res)
-    x = F.least(
-        F.greatest(
-            F.floor((F.col(lon_col) + 180.0) / 360.0 * F.lit(float(nx))),
-            F.lit(0),
-        ),
-        F.lit(nx - 1),
-    ).cast("long")
-    y = F.least(
-        F.greatest(
-            F.floor((F.col(lat_col) + 90.0) / 180.0 * F.lit(float(ny))),
-            F.lit(0),
-        ),
-        F.lit(ny - 1),
-    ).cast("long")
+    x, y = ghcell_xy(F.col(lon_col), F.col(lat_col), res)
     g = fixes.select(
         F.col(user_col).alias("user"), x.alias("_x"), y.alias("_y")
     )

@@ -515,36 +515,14 @@ def raster_tile_pyramid(
 ) -> DataFrame:
     """Raster tile materialization: roll the finest-level raster cell
     aggregates (output of ``raster_cell_stats`` at ``max(resolutions)``)
-    up the tile pyramid. Same single-linear-plan ancestor explode as
-    tiles.tile_pyramid_counts_rollup — one pass over the (bounded)
-    finest cell table, weighted sums instead of point counts; exactness
-    rests on the same aperture-4 floor-commute property the point
-    pyramid proves. Returns (res, cell, n_pixels, sum_val)."""
-    from .index import ghcell_parent
+    up the tile pyramid with tiles.pyramid_rollup, the ancestor explode
+    tiles.tile_pyramid_counts_rollup also uses — one pass over the
+    (bounded) finest cell table, weighted sums instead of point counts;
+    exactness rests on the same aperture-4 floor-commute property the
+    point pyramid proves. Returns (res, cell, n_pixels, sum_val)."""
+    from .tiles import pyramid_rollup
 
-    rs = sorted(resolutions)
-    finest = rs[-1]
-    anc = F.array(
-        *[
-            F.struct(
-                F.lit(r).alias("res"),
-                (
-                    F.col("cell")
-                    if r == finest
-                    else ghcell_parent(F.col("cell"), r, finest)
-                ).alias("acell"),
-            )
-            for r in rs
-        ]
-    )
-    return (
-        cell_stats.select(F.explode(anc).alias("_a"), "n_pixels", "sum_val")
-        .groupBy(F.col("_a.res").alias("res"), F.col("_a.acell").alias("cell"))
-        .agg(
-            F.sum("n_pixels").alias("n_pixels"),
-            F.sum("sum_val").alias("sum_val"),
-        )
-    )
+    return pyramid_rollup(cell_stats, resolutions, ["n_pixels", "sum_val"])
 
 
 def raster_zonal_stats(
@@ -580,19 +558,15 @@ def raster_zonal_stats(
 
     Returns (poly_id, n_cells, n_pixels, sum_val, mean_val) where
     mean_val = sum_val / n_pixels as one double division."""
-    from .index import GHCELL_RES_BITS, GHCELL_X_BITS, ghcell_nx, ghcell_ny
+    from .index import ghcell_center
     from .joins import pip_join
 
     cells = raster_cell_stats(rasters, res=res, payload_col=payload_col)
-    step_x = 360.0 / ghcell_nx(res)
-    step_y = 180.0 / ghcell_ny(res)
-    rem = F.col("cell") % F.lit(GHCELL_RES_BITS)
-    x = (rem / F.lit(GHCELL_X_BITS)).cast("long")
-    y = (rem % F.lit(GHCELL_X_BITS)).cast("long")
+    lon, lat = ghcell_center(F.col("cell"), res)
     pts = cells.select(
         F.col("cell").alias("point_id"),
-        ((x + F.lit(0.5)) * F.lit(step_x) - F.lit(180.0)).alias("lon"),
-        ((y + F.lit(0.5)) * F.lit(step_y) - F.lit(90.0)).alias("lat"),
+        lon.alias("lon"),
+        lat.alias("lat"),
         "n_pixels",
         "sum_val",
     )

@@ -84,7 +84,7 @@ def get_spark(
     return spark
 
 
-def spread_narrow(df, key: str | None = None, min_parts: int | None = None):
+def spread_narrow(df, key: str | None = None):
     """Hash-repartition a NARROW frame up to the session's default
     parallelism before expensive per-row work.
 
@@ -102,7 +102,7 @@ def spread_narrow(df, key: str | None = None, min_parts: int | None = None):
     gives the same retry safety for free (guide §2.5). Values/rows are
     unchanged — only their placement moves.
 
-    No-op when the frame is already at least ``min_parts`` partitions — at
+    No-op when the frame already has at least that many partitions — at
     cluster scale inputs arrive thousands-of-partitions wide and the extra
     shuffle would be pure cost, so only genuinely narrow inputs pay it.
     Only worth applying when downstream per-row work clearly dominates the
@@ -114,7 +114,7 @@ def spread_narrow(df, key: str | None = None, min_parts: int | None = None):
     if df.isStreaming:  # .rdd is illegal on streaming frames; micro-batch
         return df       # parallelism is the source's concern, not ours
     spark = df.sparkSession
-    target = int(min_parts or spark.sparkContext.defaultParallelism)
+    target = spark.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= target:
         return df
     part_key = F.col(key) if key else F.xxhash64(*[F.col(c) for c in df.columns])

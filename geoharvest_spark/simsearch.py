@@ -380,7 +380,6 @@ def lsh_topk(
     k: int = 10,
     n_bits: int = 10,
     n_tables: int = 4,
-    multiprobe: bool = True,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
@@ -399,15 +398,11 @@ def lsh_topk(
     q_sig = lsh_signatures(queries, dim, n_bits, n_tables, id_col, vec_col).select(
         F.col("id").alias("qid"), "table", "bucket"
     )
-    if multiprobe:
-        probes = F.array(
-            F.col("bucket"),
-            *[
-                F.col("bucket").bitwiseXOR(F.lit(1 << i))
-                for i in range(n_bits)
-            ],
-        )
-        q_sig = q_sig.withColumn("bucket", F.explode(probes))
+    probes = F.array(
+        F.col("bucket"),
+        *[F.col("bucket").bitwiseXOR(F.lit(1 << i)) for i in range(n_bits)],
+    )
+    q_sig = q_sig.withColumn("bucket", F.explode(probes))
 
     cand = (
         q_sig.join(c_sig, ["table", "bucket"])

@@ -41,7 +41,7 @@ def records_with_centroid(normalized_ok: DataFrame) -> DataFrame:
 
 def assign_tiles(
     records: DataFrame, resolutions: tuple[int, ...] = PYRAMID,
-    with_s2: bool = True, s2_level: int = 12,
+    s2_level: int = 12,
 ) -> DataFrame:
     """(url, id, lon, lat) -> one row per (record, res): tile assignment.
 
@@ -51,13 +51,11 @@ def assign_tiles(
     """
     cells = F.array(*[ix.ghcell(F.col("lon"), F.col("lat"), r) for r in resolutions])
     res_arr = F.array(*[F.lit(r) for r in resolutions])
-    df = records.withColumn("_cells", cells).withColumn("_res", res_arr)
-    if with_s2:
-        df = df.withColumn(
-            "s2_cell", ix.s2_cell_udf(F.col("lon"), F.col("lat"), s2_level)
-        )
-    else:
-        df = df.withColumn("s2_cell", F.lit(None).cast("long"))
+    df = (
+        records.withColumn("_cells", cells)
+        .withColumn("_res", res_arr)
+        .withColumn("s2_cell", ix.s2_cell_udf(F.col("lon"), F.col("lat"), s2_level))
+    )
     df = df.select(
         "url", "id", "lon", "lat", "s2_cell", "bbox",
         F.posexplode(F.arrays_zip("_res", "_cells")).alias("_pos", "_zc"),
@@ -87,19 +85,27 @@ def tile_pyramid_counts_rollup(
     len(resolutions) full point shuffles (r1 plan: 5x24M rows) with ONE
     point-sized shuffle + coarse aggregations over cell counts.
     """
-    rs = sorted(resolutions)
-    finest = rs[-1]
     fine = (
         points.select(
-            ix.ghcell(F.col(lon_col), F.col(lat_col), finest).alias("cell")
+            ix.ghcell(F.col(lon_col), F.col(lat_col), max(resolutions)).alias("cell")
         )
         .groupBy("cell")
         .agg(F.count(F.lit(1)).alias("n_points"))
     )
-    # ONE linear plan (a per-level union would re-run the finest aggregate
-    # per branch — Spark does not reuse identical exchanges across union
-    # arms): each finest cell explodes into its (res, ancestor) chain, then
-    # a second (cell-count-sized, tiny) aggregation yields every level.
+    return pyramid_rollup(fine, resolutions, ["n_points"])
+
+
+def pyramid_rollup(
+    fine: DataFrame, resolutions: tuple[int, ...], sum_cols: list[str]
+) -> DataFrame:
+    """(cell, *sum_cols) at the finest of `resolutions` -> (res, cell,
+    *sum_cols) at every level: each cell explodes into its (res, ancestor)
+    chain, then one (cell-count-sized) aggregation sums every level.
+
+    ONE linear plan: a per-level union would re-run the input per branch,
+    because Spark does not reuse identical exchanges across union arms."""
+    rs = sorted(resolutions)
+    finest = rs[-1]
     ancestors = F.array(
         *[
             F.struct(
@@ -114,11 +120,11 @@ def tile_pyramid_counts_rollup(
         ]
     )
     return (
-        fine.select(F.explode(ancestors).alias("_a"), "n_points")
+        fine.select(F.explode(ancestors).alias("_a"), *sum_cols)
         .groupBy(
             F.col("_a.res").alias("res"), F.col("_a.acell").alias("cell")
         )
-        .agg(F.sum("n_points").alias("n_points"))
+        .agg(*[F.sum(c).alias(c) for c in sum_cols])
     )
 
 

@@ -34,15 +34,34 @@ def test_ghcell_parent_containment():
 
 def test_ghcell_spark_matches_numpy(spark):
     lon, lat = _rand_lonlat(500, seed=3)
-    pdf = list(zip(lon.tolist(), lat.tolist()))
-    df = spark.createDataFrame(pdf, "lon double, lat double")
+    # grid edges and out-of-range inputs: every combination must clamp
+    # the same way on both sides
+    edge_lon = [-180.0, 180.0, 179.9999999, -200.0, 200.0]
+    edge_lat = [-90.0, 90.0, -95.0, 95.0]
+    lon = np.concatenate([lon, np.repeat(edge_lon, len(edge_lat))])
+    lat = np.concatenate([lat, np.tile(edge_lat, len(edge_lon))])
+    pdf = list(zip(range(len(lon)), lon.tolist(), lat.tolist()))
+    df = spark.createDataFrame(pdf, "i long, lon double, lat double")
+    cell = ix.ghcell(F.col("lon"), F.col("lat"), 7)
+    clon, clat = ix.ghcell_center(cell, 7)
     got = (
-        df.withColumn("cell", ix.ghcell(F.col("lon"), F.col("lat"), 7))
-        .select("cell")
-        .toPandas()["cell"]
-        .to_numpy()
+        df.select(
+            "i",
+            cell.alias("cell"),
+            clon.alias("clon"),
+            clat.alias("clat"),
+            ix.ghcell(clon, clat, 7).alias("recell"),
+        )
+        .orderBy("i")
+        .toPandas()
     )
-    assert np.array_equal(np.sort(got), np.sort(ix.ghcell_np(lon, lat, 7)))
+    expected = ix.ghcell_np(lon, lat, 7)
+    assert np.array_equal(got["cell"].to_numpy(), expected)
+    # the Column center round-trips and is bit-identical to the numpy twin
+    assert np.array_equal(got["recell"].to_numpy(), expected)
+    nlon, nlat = ix.ghcell_center_np(expected)
+    assert np.array_equal(got["clon"].to_numpy(), nlon)
+    assert np.array_equal(got["clat"].to_numpy(), nlat)
 
 
 def test_ghcell_sql_fragment_matches(spark):

@@ -104,13 +104,6 @@ def test_pip_main_join_not_broadcast(spark, points_df):
 def test_knn_matches_brute_force(spark, points_df):
     pts, _ = points_df
     queries = query_points_df(spark, 120)
-    got = (
-        knn_join(queries, pts, res=4, ring=1)
-        .select("qid", "point_id", "rank")
-        .toPandas()
-        .sort_values(["qid", "rank"])
-        .reset_index(drop=True)
-    )
     exp = (
         knn_brute_force(queries, pts)
         .select("qid", "point_id", "rank")
@@ -118,8 +111,18 @@ def test_knn_matches_brute_force(spark, points_df):
         .sort_values(["qid", "rank"])
         .reset_index(drop=True)
     )
-    assert got.shape == exp.shape
-    pd.testing.assert_frame_equal(got, exp)
+    # escalations=() sends every query the first ring leaves unresolved
+    # straight to the brute-force fallback
+    for escalations in ((4,), ()):
+        got = (
+            knn_join(queries, pts, res=4, ring=1, escalations=escalations)
+            .select("qid", "point_id", "rank")
+            .toPandas()
+            .sort_values(["qid", "rank"])
+            .reset_index(drop=True)
+        )
+        assert got.shape == exp.shape
+        pd.testing.assert_frame_equal(got, exp)
 
 
 def test_knn_python_oracle_spotcheck(spark, points_df):
