@@ -159,12 +159,24 @@ def explode_bbox_cells(
     )
 
 
-def ghcell_np(lon: np.ndarray, lat: np.ndarray, res: int) -> np.ndarray:
-    """numpy twin of ghcell() for oracles/tests."""
+def ghcell_xy_np(
+    lon: np.ndarray, lat: np.ndarray, res: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """numpy twin of ghcell_xy: points -> clamped int64 (x, y) at `res`."""
     nx, ny = ghcell_nx(res), ghcell_ny(res)
     x = np.clip(np.floor((np.asarray(lon) + 180.0) / 360.0 * nx).astype(np.int64), 0, nx - 1)
     y = np.clip(np.floor((np.asarray(lat) + 90.0) / 180.0 * ny).astype(np.int64), 0, ny - 1)
-    return res * GHCELL_RES_BITS + x * GHCELL_X_BITS + y
+    return x, y
+
+
+def ghcell_from_xy_np(x, y, res: int) -> np.ndarray:
+    """numpy twin of ghcell_from_xy: grid coordinates -> ghcell ids."""
+    return res * GHCELL_RES_BITS + np.asarray(x, dtype=np.int64) * GHCELL_X_BITS + y
+
+
+def ghcell_np(lon: np.ndarray, lat: np.ndarray, res: int) -> np.ndarray:
+    """numpy twin of ghcell() for oracles/tests."""
+    return ghcell_from_xy_np(*ghcell_xy_np(lon, lat, res), res)
 
 
 def ghcell_decode_np(cells) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
@@ -174,22 +186,23 @@ def ghcell_decode_np(cells) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     return cells // GHCELL_RES_BITS, rem // GHCELL_X_BITS, rem % GHCELL_X_BITS
 
 
+def ghcell_ring_axes_np(
+    x: int, y: int, k: int, res: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """Columns and rows of the cells within Chebyshev distance k of (x, y)
+    at `res`: x wraps around the antimeridian (every column once when the
+    ring is wider than the grid), y clamps at the poles."""
+    nx, ny = ghcell_nx(res), ghcell_ny(res)
+    xs = np.arange(nx) if 2 * k + 1 >= nx else (x + np.arange(-k, k + 1)) % nx
+    return xs, np.arange(max(y - k, 0), min(y + k, ny - 1) + 1)
+
+
 def ghcell_kring_np(cell: int, k: int) -> list[int]:
     """All cells within Chebyshev distance k (x wraps around the antimeridian,
-    y clamps at the poles). Driver-side helper for kNN ring expansion — the
-    ring set per query is tiny and is shipped as an exploded candidate table.
-    """
+    y clamps at the poles), sorted."""
     res, x, y = (int(v) for v in ghcell_decode_np(cell))
-    nx, ny = ghcell_nx(res), ghcell_ny(res)
-    out = set()
-    for dx in range(-k, k + 1):
-        for dy in range(-k, k + 1):
-            yy = y + dy
-            if yy < 0 or yy >= ny:
-                continue
-            xx = (x + dx) % nx
-            out.add(res * GHCELL_RES_BITS + xx * GHCELL_X_BITS + yy)
-    return sorted(out)
+    xs, ys = ghcell_ring_axes_np(x, y, k, res)
+    return sorted(ghcell_from_xy_np(xs[:, None], ys[None, :], res).ravel().tolist())
 
 
 def ghcell_center_np(cells: np.ndarray) -> tuple[np.ndarray, np.ndarray]:

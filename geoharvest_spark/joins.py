@@ -19,11 +19,15 @@ PIP join
 
 kNN join
 --------
-k-ring expansion around the query's cell at a density-matched resolution ->
-equi-join on cell -> exact haversine (JVM expression, no Python) ->
-ranking window row_number() <= k (distance-sorted pruning). Queries that a
-ring leaves underfilled (sparse oceans) fall back to a brute-force pass —
-correct for all inputs, and at scale the fallback set is tiny.
+One exact ring pass. A census of points per cell, two levels finer than
+the join grid, is collected to the driver as a dense count grid (its size
+is fixed by the grid, never by the data). A query-side UDF sizes each
+query's ring from it: an upper bound D on the k-th nearest distance, then
+the smallest ring whose guaranteed-coverage radius exceeds D, keeping only
+cells with points. Rings equi-join the points on cell -> exact haversine
+(JVM expression, no Python) -> drop candidates beyond D -> ranking window
+row_number() <= k (distance-sorted pruning). Every point as near as the k-th is in the ring
+by construction, so there is no escalation and no brute-force tail.
 """
 
 from __future__ import annotations
@@ -31,12 +35,12 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType
 
 from . import index as ix
-from .geo import haversine_m, parse_polygon_wkt, points_in_polygon
+from .geo import EARTH_RADIUS_M, haversine_m, parse_polygon_wkt, points_in_polygon
 
 
 # ---------------------------------------------------------------------------
@@ -196,112 +200,210 @@ def pip_join(
 # kNN join
 # ---------------------------------------------------------------------------
 def _ring_guard_m(
-    lon: np.ndarray, lat: np.ndarray, res: int, ring: int
+    lon: np.ndarray, lat: np.ndarray, res: int, ring
 ) -> np.ndarray:
-    """Guaranteed-coverage radius (meters) of the ring around each query.
+    """Guaranteed-coverage radius (meters) of the ring around each query
+    (`ring` is a scalar or one radius per query).
 
-    Any point strictly inside this disc is inside some ring cell, so a kNN
-    result whose k-th distance is <= guard is provably exact. Margins:
+    Any point strictly inside this disc is inside some ring cell. Margins:
     - to the box's parallels: R * delta_phi (exact min distance);
     - to the box's meridians: R * asin(sin(min(dlam, pi/2)) * cos(phi_q))
       (exact min distance to a meridian);
-    - clamped pole edge -> distance to the pole; full longitude wrap -> inf.
+    - clamped pole edge -> distance to the pole, or inf when the ring also
+      wraps every longitude (the polar cap is then inside the ring); full
+      longitude wrap -> inf.
     """
-    from .geo import EARTH_RADIUS_M
-
     nx, ny = ix.ghcell_nx(res), ix.ghcell_ny(res)
     deg_x, deg_y = 360.0 / nx, 180.0 / ny
-    _, x, y = ix.ghcell_decode_np(ix.ghcell_np(lon, lat, res))
-    lat_r = np.radians(lat)
+    x, y = ix.ghcell_xy_np(lon, lat, res)
+    ring = np.asarray(ring)
+    full = 2 * ring + 1 >= nx
+    to_m = np.pi / 180.0 * EARTH_RADIUS_M
 
     y_lo, y_hi = y - ring, y + ring
     lat_bot = np.where(y_lo <= 0, -90.0, -90.0 + y_lo * deg_y)
     lat_top = np.where(y_hi >= ny - 1, 90.0, -90.0 + (y_hi + 1) * deg_y)
     m_south = np.where(
-        lat_bot <= -90.0,
-        (lat + 90.0),
-        (lat - lat_bot),
-    ) * np.pi / 180.0 * EARTH_RADIUS_M
+        lat_bot <= -90.0, np.where(full, np.inf, lat + 90.0), lat - lat_bot
+    ) * to_m
     m_north = np.where(
-        lat_top >= 90.0,
-        (90.0 - lat),
-        (lat_top - lat),
-    ) * np.pi / 180.0 * EARTH_RADIUS_M
+        lat_top >= 90.0, np.where(full, np.inf, 90.0 - lat), lat_top - lat
+    ) * to_m
 
-    if 2 * ring + 1 >= nx:
-        m_lon = np.full(len(lon), np.inf)
-    else:
-        west = -180.0 + (x - ring) * deg_x
-        east = -180.0 + (x + ring + 1) * deg_x
-        dlam = np.minimum(lon - west, east - lon)  # degrees, >= 0
-        dlam_r = np.minimum(np.radians(np.maximum(dlam, 0.0)), np.pi / 2)
-        m_lon = EARTH_RADIUS_M * np.arcsin(
-            np.clip(np.sin(dlam_r) * np.cos(lat_r), 0.0, 1.0)
-        )
+    west = -180.0 + (x - ring) * deg_x
+    east = -180.0 + (x + ring + 1) * deg_x
+    dlam = np.minimum(lon - west, east - lon)  # degrees, >= 0
+    dlam_r = np.minimum(np.radians(np.maximum(dlam, 0.0)), np.pi / 2)
+    m_lon = np.where(full, np.inf, EARTH_RADIUS_M * np.arcsin(
+        np.clip(np.sin(dlam_r) * np.cos(np.radians(lat)), 0.0, 1.0)
+    ))
     return np.minimum(np.minimum(m_south, m_north), m_lon)
 
 
-def _ring_cells_udf(res: int, ring: int):
-    @F.pandas_udf("struct<cells: array<long>, guard_m: double>")
-    def _rings(lon: pd.Series, lat: pd.Series) -> pd.DataFrame:
-        lon_np, lat_np = lon.to_numpy(), lat.to_numpy()
-        cells = ix.ghcell_np(lon_np, lat_np, res)
-        guard = _ring_guard_m(lon_np, lat_np, res, ring)
+def _census_level(res: int) -> int:
+    """Resolution of the kNN point census: two levels finer than the join
+    grid, capped at 8 (a 2048 x 1024 grid, whatever the data size)."""
+    return min(res + 2, 8)
+
+
+def _knn_census(p: DataFrame, res: int) -> np.ndarray:
+    """Dense (nx, ny) point-count grid at the census level, from one
+    aggregation of the points by cell collected to the driver. Its size
+    is fixed by the grid, never by the data.
+
+    A point with a null lon or lat has no cell, so it is never a neighbor
+    and is not counted. Any other point outside lon [-180, 180] x lat
+    [-90, 90], or NaN, raises ValueError: the ring bounds assume each
+    point lies in its cell, which the grid's clamping breaks for them."""
+    lvl = _census_level(res)
+    lon, lat = F.col("p_lon"), F.col("p_lat")
+    x, y = ix.ghcell_xy(lon, lat, lvl)
+    ok = lon.between(-180.0, 180.0) & lat.between(-90.0, 90.0)
+    cen = (
+        p.where(lon.isNotNull() & lat.isNotNull())
+        .groupBy(F.when(ok, x).alias("x"), F.when(ok, y).alias("y"))
+        .count()
+        .toPandas()
+    )
+    bad = cen["x"].isna()
+    if bad.any():
+        raise ValueError(
+            f"knn_join: {int(cen['count'][bad].sum())} points lie outside "
+            "lon [-180, 180] x lat [-90, 90] or are NaN"
+        )
+    cen = cen[~bad]
+    grid = np.zeros((ix.ghcell_nx(lvl), ix.ghcell_ny(lvl)), dtype=np.int64)
+    xy = cen["x"].to_numpy(np.int64), cen["y"].to_numpy(np.int64)
+    grid[xy] = cen["count"].to_numpy()
+    return grid
+
+
+def _cell_far_m(
+    lon: float, lat: float, x: np.ndarray, y: np.ndarray, res: int
+) -> np.ndarray:
+    """Upper bound (meters) on the distance from (lon, lat) to any point of
+    the cells (x, y) at `res`: R * (dphi + cos_max * dlam), the length of a
+    path along a meridian and a parallel — the query's parallel, or the
+    point's, whose cosine is at most the cell's widest; cos_max is the
+    smaller of the two. dlam is 180 degrees when the cell holds the
+    query's antimeridian."""
+    deg_x, deg_y = 360.0 / ix.ghcell_nx(res), 180.0 / ix.ghcell_ny(res)
+    w, s = -180.0 + x * deg_x, -90.0 + y * deg_y
+    dphi = np.maximum(np.abs(lat - s), np.abs(s + deg_y - lat))
+
+    def sep(a):  # wrapped longitude separation, degrees in [0, 180]
+        return np.abs((a - lon + 180.0) % 360.0 - 180.0)
+
+    anti = (lon + 180.0 - w) % 360.0 <= deg_x
+    dlam = np.where(anti, 180.0, np.maximum(sep(w), sep(w + deg_x)))
+    cos_max = np.minimum(
+        np.cos(np.radians(lat)), np.cos(np.radians(np.clip(0.0, s, s + deg_y)))
+    )
+    return EARTH_RADIUS_M * np.radians(dphi + cos_max * dlam)
+
+
+def _first_true(lo: np.ndarray, hi: int, ok) -> np.ndarray:
+    """Per element, the smallest s in [lo, hi] with ok(s) true, by
+    bisection; ok must be monotone in s and true at hi."""
+    hi = np.full(len(lo), hi)
+    while (lo < hi).any():
+        mid = (lo + hi) // 2
+        good = ok(mid)
+        lo, hi = np.where(good, lo, mid + 1), np.where(good, mid, hi)
+    return lo
+
+
+def _knn_rings(
+    lon: np.ndarray, lat: np.ndarray, k: np.ndarray, grid: np.ndarray,
+    res: int, ring: int,
+) -> tuple[list[np.ndarray], np.ndarray]:
+    """Size each query's ring from the census grid -> (ring cells at `res`
+    per query, D per query).
+
+    D bounds the k-th nearest distance from above: the smallest census box
+    around the query holding min(k, n) points is ordered by _cell_far_m,
+    and D is the bound at which the running count reaches min(k, n),
+    padded by a relative 1e-9. The ring is the smallest one >= `ring`
+    whose guard radius exceeds D, so every point as near as the k-th lies
+    strictly inside it, and only its cells that the census saw points in
+    are returned. k <= 0 or no points -> no cells. A query outside lon [-180, 180] x lat [-90, 90], NaN or
+    null, raises ValueError."""
+    if not ((np.abs(lon) <= 180.0).all() and (np.abs(lat) <= 90.0).all()):
+        raise ValueError(
+            "knn_join: query lon/lat outside [-180, 180] x [-90, 90] or missing"
+        )
+    lvl = _census_level(res)
+    nxl, nyl = grid.shape
+    need = np.minimum(np.maximum(np.asarray(k, dtype=np.int64), 0), grid.sum())
+    # summed-area table over the grid tiled twice in x: a wrapped x range
+    # of width <= nxl is one contiguous range of the tiled grid
+    sat = np.zeros((2 * nxl + 1, nyl + 1), dtype=np.int64)
+    sat[1:, 1:] = np.tile(grid, (2, 1)).cumsum(0).cumsum(1)
+    qx, qy = ix.ghcell_xy_np(lon, lat, lvl)
+
+    def box_count(s):
+        full = 2 * s + 1 >= nxl
+        x0 = np.where(full, 0, (qx - s) % nxl)
+        x1 = x0 + np.where(full, nxl, 2 * s + 1)
+        y0, y1 = np.maximum(qy - s, 0), np.minimum(qy + s, nyl - 1) + 1
+        return sat[x1, y1] - sat[x0, y1] - sat[x1, y0] + sat[x0, y0]
+
+    n_q = len(need)
+    box = _first_true(  # smallest box holding `need` points
+        np.zeros(n_q, dtype=np.int64), max(nxl // 2, nyl - 1),
+        lambda s: box_count(s) >= need,
+    )
+    todo = np.flatnonzero(need > 0)
+    d_k = np.zeros(n_q)
+    for i in todo:
+        xs, ys = ix.ghcell_ring_axes_np(qx[i], qy[i], box[i], lvl)
+        counts = grid[np.ix_(xs, ys)]
+        bx, by = np.nonzero(counts)
+        far = _cell_far_m(lon[i], lat[i], xs[bx], ys[by], lvl)
+        order = np.argsort(far)
+        hit = np.searchsorted(np.cumsum(counts[bx, by][order]), need[i])
+        d_k[i] = far[order[hit]]
+    d_k *= 1.0 + 1e-9  # headroom for the last bits of the JVM's haversine
+
+    # smallest ring >= `ring` with guard > D; the whole-grid ring's guard
+    # is infinite, so one always qualifies
+    nx, ny = ix.ghcell_nx(res), ix.ghcell_ny(res)
+    radius = _first_true(
+        np.full(n_q, ring, dtype=np.int64), max(ring, nx // 2, ny - 1),
+        lambda r: _ring_guard_m(lon, lat, res, r) > d_k,
+    )
+
+    # cells with points: the census pooled up to `res`, or, when `res` is
+    # finer than the census, the census cell holding each res cell
+    shift = max(res - lvl, 0)
+    if shift:
+        occupied = grid > 0
+    else:
+        f = 1 << (lvl - res)
+        occupied = grid.reshape(nx, f, ny, f).sum(axis=(1, 3)) > 0
+    x, y = ix.ghcell_xy_np(lon, lat, res)
+    cells = [np.empty(0, dtype=np.int64)] * n_q
+    for i in todo:
+        xs, ys = ix.ghcell_ring_axes_np(x[i], y[i], radius[i], res)
+        cx, cy = np.nonzero(occupied[np.ix_(xs >> shift, ys >> shift)])
+        cells[i] = ix.ghcell_from_xy_np(xs[cx], ys[cy], res)
+    return cells, d_k
+
+
+def _knn_rings_udf(grid: np.ndarray, res: int, ring: int):
+    @F.pandas_udf("struct<cells: array<long>, d_max: double>")
+    def _rings(lon: pd.Series, lat: pd.Series, k: pd.Series) -> pd.DataFrame:
+        cells, d_max = _knn_rings(
+            lon.to_numpy(), lat.to_numpy(), k.to_numpy(), grid, res, ring
+        )
         return pd.DataFrame(
-            {
-                "cells": [ix.ghcell_kring_np(int(c), ring) for c in cells],
-                "guard_m": guard,
-            }
+            {"cells": pd.Series(cells, dtype=object), "d_max": d_max}
         )
 
-    return _rings
-
-
-def _knn_ring_pass(
-    q: DataFrame, p: DataFrame, res: int, ring: int
-) -> tuple[DataFrame, DataFrame]:
-    """One ring pass -> (exact_results, unresolved_queries).
-
-    A ring answer is exact iff it filled k rows AND the k-th distance is
-    within the guaranteed-coverage radius of the ring.
-    """
-    ring_cells = _ring_cells_udf(res, ring)
-    q2 = q.withColumn("_rc", ring_cells(F.col("q_lon"), F.col("q_lat")))
-    q_cells = (
-        q2.withColumn("cell", F.explode(F.col("_rc.cells")))
-        .withColumn("guard_m", F.col("_rc.guard_m"))
-        .drop("_rc")
-    )
-    cand = q_cells.join(p, "cell", "inner").drop("cell")
-    cand = cand.withColumn(
-        "dist_m",
-        haversine_m(F.col("q_lon"), F.col("q_lat"), F.col("p_lon"), F.col("p_lat")),
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("dist_m").asc(), F.col("point_id"))
-    # ranked is tiny (<= queries*k rows) but expensive to produce; cache so
-    # the unresolved-detection agg and the exact-output anti-join don't
-    # recompute the window over the full candidate set
-    ranked = (
-        cand.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= F.col("_k"))
-        .cache()
-    )
-    counts = ranked.groupBy("qid").agg(
-        F.count(F.lit(1)).alias("_n"),
-        F.max("dist_m").alias("_kth"),
-        F.first("guard_m").alias("_guard"),
-    )
-    unresolved = (
-        q.join(counts, "qid", "left")
-        .where(
-            (F.coalesce(F.col("_n"), F.lit(0)) < F.col("_k"))
-            | (F.col("_kth") > F.col("_guard"))
-        )
-        .select("qid", "q_lon", "q_lat", "_k")
-    )
-    out_cols = ["qid", "point_id", "rank", "dist_m"]
-    exact = ranked.join(unresolved.select("qid"), "qid", "left_anti").select(*out_cols)
-    return exact, unresolved
+    # deterministic, but marked otherwise so the optimizer never copies
+    # it: the isnotnull(d_max) filter it infers from the distance cut
+    # would run the UDF a second time on the query side
+    return _rings.asNondeterministic()
 
 
 def knn_join(
@@ -311,19 +413,20 @@ def knn_join(
     res: int = 4,
     ring: int = 1,
     point_key: str = "point_id",
-    escalations: tuple[int, ...] = (4,),
 ) -> DataFrame:
     """kNN: for each query row (qid, lon, lat[, k]) find the k nearest
     points (point_id, lon, lat) by haversine distance.
 
-    Returns (qid, point_id, rank, dist_m). If `k` is None, the per-row
-    ``k`` column of `queries` is used.
+    Returns (qid, point_id, rank, dist_m), ties ranked by point_id. If `k`
+    is None, the per-row ``k`` column of `queries` is used.
 
-    Plan (W3/W4: ranking window + distance-sorted pruning): staged ring
-    expansion — pass 1 at `ring`, then `ring * escalations[i]` for the
-    still-unresolved queries only, finally an exact brute-force pass for
-    whatever remains (sparse oceans). Each stage touches only unresolved
-    queries, so at production scale the expensive stages see ~0 rows.
+    Plan (W3/W4: ranking window + distance-sorted pruning): one census of
+    the points per cell (collected to the driver), then one exact ring
+    pass — a query-side UDF sizes each query's ring (>= `ring`) from the
+    census so that it holds every point as near as the k-th, the rings
+    equi-join the points on cell, candidates farther than the sizing's
+    k-th-distance bound are dropped, and a row_number() window keeps
+    rank <= k. No escalation and no brute-force tail.
     """
     k_col = F.lit(k) if k is not None else F.col("k")
     q = queries.select(
@@ -340,39 +443,31 @@ def knn_join(
         F.col("lat").alias("p_lat"),
         ix.ghcell(F.col("lon"), F.col("lat"), res).alias("cell"),
     )
-
-    results = []
-    pending = q
-    for mult in (1, *escalations):
-        exact, pending = _knn_ring_pass(pending, p, res, ring * mult)
-        results.append(exact)
-        pending = pending.cache()
-        if pending.isEmpty():  # cheap action on a tiny cached frame —
-            pending = None     # skips every later escalation stage
-            break
-
-    out = results[0]
-    for r in results[1:]:
-        out = out.unionByName(r)
-
-    if pending is not None:
-        # final exact pass for anything still unresolved
-        out = out.unionByName(_knn_exact(pending, p.drop("cell")))
-    return out
+    rings = _knn_rings_udf(_knn_census(p, res), res, ring)
+    q_cells = q.withColumn("_r", rings("q_lon", "q_lat", "_k")).select(
+        *q.columns,
+        F.explode("_r.cells").alias("cell"),
+        F.col("_r.d_max").alias("_d_max"),
+    )
+    return _knn_rank(q_cells.join(p, "cell", "inner"), F.col("_d_max"))
 
 
-def _knn_exact(q: DataFrame, p: DataFrame) -> DataFrame:
-    """Exact kNN of projected queries (qid, q_lon, q_lat, _k) over projected
-    points (point_id, p_lon, p_lat): cross join, haversine, rank <= _k.
-    Returns (qid, point_id, rank, dist_m)."""
+def _knn_rank(cand: DataFrame, d_max: Column | None = None) -> DataFrame:
+    """Rank candidate (query, point) pairs — (qid, q_lon, q_lat, _k) beside
+    (point_id, p_lon, p_lat) — by haversine distance, ties by point_id,
+    and keep rank <= _k. Returns (qid, point_id, rank, dist_m).
+
+    `d_max`: an upper bound on each query's k-th distance; farther
+    candidates cannot rank <= _k and are dropped before the window."""
     w = Window.partitionBy("qid").orderBy(F.col("dist_m").asc(), F.col("point_id"))
+    cand = cand.withColumn(
+        "dist_m",
+        haversine_m(F.col("q_lon"), F.col("q_lat"), F.col("p_lon"), F.col("p_lat")),
+    )
+    if d_max is not None:
+        cand = cand.where(F.col("dist_m") <= d_max)
     return (
-        q.crossJoin(p)
-        .withColumn(
-            "dist_m",
-            haversine_m(F.col("q_lon"), F.col("q_lat"), F.col("p_lon"), F.col("p_lat")),
-        )
-        .withColumn("rank", F.row_number().over(w))
+        cand.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= F.col("_k"))
         .select("qid", "point_id", "rank", "dist_m")
     )
@@ -454,7 +549,7 @@ def knn_brute_force(
         F.col(point_key).alias("point_id"),
         F.col("lon").alias("p_lon"), F.col("lat").alias("p_lat"),
     )
-    return _knn_exact(q, p)
+    return _knn_rank(q.crossJoin(p))
 
 
 def within_radius_join(

@@ -1583,7 +1583,8 @@ def substring_span_dedup(
     # cached: consumed by BOTH the keeper aggregate and the dup probe —
     # without it the tokenize+hash+explode pass (the op's dominant cost,
     # ~1/3 of wall time at the 250k bench) runs twice (same discipline
-    # as knn_join's census cache; bench clears cache between reps)
+    # as pip_join's cached salt-factor census; bench clears cache
+    # between reps)
     occ = (
         base.select(
             F.col("id"),

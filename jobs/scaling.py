@@ -162,10 +162,10 @@ def main() -> None:
     # W4 kNN. Two measurement fixes vs r1:
     # - 2000 queries (not 300): ~126M candidate distances, so compute >>
     #   fixed overhead;
-    # - a UNIQUE query frame per rep: knn_join caches its ranked frame
-    #   internally and Spark's CacheManager matches semantically-equal
-    #   plans, so identical reps silently re-read rep 1's cache and
-    #   _timed_min measured cached reads (the r1 0.89s/0.45s numbers).
+    # - a UNIQUE query frame per rep: Spark's CacheManager matches
+    #   semantically-equal plans, so a rep must never be able to read an
+    #   earlier rep's cache (r1's 0.89s/0.45s numbers were such reads,
+    #   from a ranked-frame cache knn_join no longer has).
     def _knn_rep(n_extra: int):
         qs = query_points_df(spark, 2000 + n_extra)
         _noop(knn_join(qs, pts, res=4, ring=1))

@@ -101,28 +101,124 @@ def test_pip_main_join_not_broadcast(spark, points_df):
     assert any("cell" in s for s in shj)
 
 
-def test_knn_matches_brute_force(spark, points_df):
-    pts, _ = points_df
-    queries = query_points_df(spark, 120)
-    exp = (
-        knn_brute_force(queries, pts)
-        .select("qid", "point_id", "rank")
+def _knn_sorted(df) -> pd.DataFrame:
+    return (
+        df.select("qid", "point_id", "rank", "dist_m")
         .toPandas()
         .sort_values(["qid", "rank"])
         .reset_index(drop=True)
     )
-    # escalations=() sends every query the first ring leaves unresolved
-    # straight to the brute-force fallback
-    for escalations in ((4,), ()):
-        got = (
-            knn_join(queries, pts, res=4, ring=1, escalations=escalations)
-            .select("qid", "point_id", "rank")
-            .toPandas()
-            .sort_values(["qid", "rank"])
-            .reset_index(drop=True)
-        )
-        assert got.shape == exp.shape
+
+
+def test_knn_matches_brute_force(spark, points_df):
+    pts, _ = points_df
+    queries = query_points_df(spark, 120)
+    exp = _knn_sorted(knn_brute_force(queries, pts))
+    got = _knn_sorted(knn_join(queries, pts, res=4, ring=1))
+    assert got.shape == exp.shape
+    pd.testing.assert_frame_equal(got, exp)
+
+
+def test_knn_adversarial_shapes_match_brute_force(spark):
+    """One ring pass sized from the census must stay exact on the shapes
+    that break ring-based kNN: a far-away cluster (whole-grid ring),
+    poles and the antimeridian, 100-way ties, k = 0, k > n, no points,
+    and a join grid finer than the census."""
+    from geoharvest_spark import index as ix
+    from geoharvest_spark.joins import _census_level, _knn_rings
+
+    rng = np.random.RandomState(3)
+    pts_rows = [  # one far cluster
+        (i, 100.0 + rng.uniform(-0.5, 0.5), -30.0 + rng.uniform(-0.5, 0.5))
+        for i in range(200)
+    ]
+    pts_rows += [(1000 - i, 179.99, 89.5) for i in range(100)]  # 100-way tie
+    pts_rows += [(2000, -180.0, -90.0), (2001, 180.0, 0.0), (2002, -179.99, 1.0)]
+    q_rows = [
+        (0, -80.0, 40.0, 5),   # antipodal side of the cluster
+        (1, 0.0, 90.0, 7),
+        (2, 45.0, -90.0, 3),
+        (3, 180.0, 0.5, 4),
+        (4, -180.0, -0.5, 12),
+        (5, 179.99, 89.5, 20),  # on the tie: ranks by point_id
+        (6, -179.99, 45.0, 1),
+        (7, 100.0, -30.0, 0),  # k = 0
+        (8, 10.0, 10.0, 10_000),  # k > n
+    ]
+    q_schema = "qid long, lon double, lat double, k int"
+    p_schema = "point_id long, lon double, lat double"
+    queries = spark.createDataFrame(q_rows, q_schema)
+    pts = spark.createDataFrame(pts_rows, p_schema)
+
+    exp = _knn_sorted(knn_brute_force(queries, pts))
+    for res in (4, 9):  # 9: finer than the census, which caps at 8
+        got = _knn_sorted(knn_join(queries, pts, res=res, ring=1))
         pd.testing.assert_frame_equal(got, exp)
+    assert (exp.qid == 7).sum() == 0 and (exp.qid == 8).sum() == len(pts_rows)
+    tie = exp[exp.qid == 5].point_id.tolist()
+    assert tie == sorted(tie)
+
+    # the far query's ring is the whole grid: every occupied cell
+    res = 4
+    lvl = _census_level(res)
+    grid = np.zeros((ix.ghcell_nx(lvl), ix.ghcell_ny(lvl)), dtype=np.int64)
+    lon, lat = np.array([r[1] for r in pts_rows]), np.array([r[2] for r in pts_rows])
+    np.add.at(grid, ix.ghcell_xy_np(lon, lat, lvl), 1)
+    far = np.array([-80.0]), np.array([40.0]), np.array([5])
+    cells, _ = _knn_rings(*far, grid, res, 1)
+    assert set(cells[0].tolist()) == set(ix.ghcell_np(lon, lat, res).tolist())
+
+    empty = spark.createDataFrame([], p_schema)
+    assert knn_join(queries, empty, res=4).count() == 0
+    assert knn_brute_force(queries, empty).count() == 0
+
+    # a point with a null coordinate is never a neighbor; one outside the
+    # lon/lat domain (or NaN) would break the ring bounds, so it raises
+    no_loc = spark.createDataFrame([(3000, None, 5.0)], p_schema)
+    got = _knn_sorted(knn_join(queries, pts.unionByName(no_loc), res=4))
+    pd.testing.assert_frame_equal(got, exp)
+    for lon, lat in ((200.0, 0.0), (0.0, -95.0), (float("nan"), 0.0)):
+        off = spark.createDataFrame([(3001, lon, lat)], p_schema)
+        with pytest.raises(ValueError, match="outside"):
+            knn_join(queries, pts.unionByName(off), res=4)
+    with pytest.raises(Exception, match="outside"):
+        knn_join(spark.createDataFrame([(9, 0.0, 91.0, 1)], q_schema), pts).collect()
+
+
+def test_knn_ring_sizing_covers_kth_neighbor():
+    """Sizing-kernel property: D bounds the brute-force k-th distance, and
+    every point within D lies in an emitted ring cell."""
+    from geoharvest_spark import index as ix
+    from geoharvest_spark.joins import _census_level, _knn_rings
+
+    rng = np.random.RandomState(11)
+    for trial in range(24):
+        res = trial % 10
+        n = rng.randint(0, 250)
+        if trial % 3 == 0:  # uniform
+            lon, lat = rng.uniform(-180, 180, n), rng.uniform(-90, 90, n)
+        elif trial % 3 == 1:  # one tight cluster
+            lon = np.clip(rng.normal(30, 1, n), -180, 180)
+            lat = np.clip(rng.normal(-40, 1, n), -90, 90)
+        else:  # poles and the antimeridian
+            lon = rng.choice([-180.0, 180.0, 179.99, -179.99, 0.0], n)
+            lat = rng.choice([-90.0, 90.0, 89.9, 0.0, -45.0], n)
+        lvl = _census_level(res)
+        grid = np.zeros((ix.ghcell_nx(lvl), ix.ghcell_ny(lvl)), dtype=np.int64)
+        np.add.at(grid, ix.ghcell_xy_np(lon, lat, lvl), 1)
+        qlon = np.r_[rng.uniform(-180, 180, 14), 180.0, -180.0, 179.99, 0.0]
+        qlat = np.r_[rng.uniform(-90, 90, 14), 90.0, -90.0, 0.0, 89.99]
+        k = rng.randint(0, 15, len(qlon))
+        cells, d_max = _knn_rings(qlon, qlat, k, grid, res, rng.randint(1, 3))
+        pcell = ix.ghcell_np(lon, lat, res)
+        for i in range(len(qlon)):
+            kk = min(k[i], n)
+            if kk == 0:
+                assert len(cells[i]) == 0
+                continue
+            d = geo.haversine_np(lon, lat, qlon[i], qlat[i])
+            assert np.sort(d)[kk - 1] <= d_max[i]
+            assert np.isin(pcell[d <= d_max[i]], cells[i]).all()
 
 
 def test_knn_python_oracle_spotcheck(spark, points_df):
