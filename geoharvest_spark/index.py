@@ -4,14 +4,13 @@ North-rule requirement (BASELINE.json): assign H3 (res 5-9) and S2 cell
 indexes per record with a broadcast-free, salt-partitioned shuffle for
 hot-cell skew.
 
-H3 note: the `h3` wheel is NOT installed in this container. If it is
-importable at runtime we use it (``cell_h3_udf``); otherwise the engine's
-hexagon-role index is ``ghcell`` — a deterministic hierarchical aperture-4
-lat/lon grid with the same API surface (point->cell, parent, k-ring,
-resolution 0..15). ghcell is intentionally expressible as pure integer
-arithmetic so (a) it runs entirely JVM-side inside whole-stage codegen (no
-Python in the hot path at 100 TB) and (b) the DuckDB oracle can recompute it
-in ANSI SQL for the driver's correctness gate.
+H3 note: the engine never calls the `h3` library. Its hexagon-role index
+is ``ghcell`` — a deterministic hierarchical aperture-4 lat/lon grid with
+the same API surface (point->cell, parent, k-ring, resolution 0..15).
+ghcell is intentionally expressible as pure integer arithmetic so (a) it
+runs entirely JVM-side inside whole-stage codegen (no Python in the hot
+path at 100 TB) and (b) the DuckDB oracle can recompute it in ANSI SQL
+to check query results.
 
 S2: a faithful pure-numpy implementation of the public S2 cell-id scheme
 (quadratic ST projection + Hilbert curve position, level 30 leaf ids), per
@@ -36,14 +35,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-try:  # optional real-H3 fast path (not present in this container)
-    import h3 as _h3  # type: ignore
-
-    HAVE_H3 = True
-except Exception:  # pragma: no cover
-    _h3 = None
-    HAVE_H3 = False
 
 GHCELL_RES_BITS = 2**50
 GHCELL_X_BITS = 2**25
@@ -332,20 +323,6 @@ def s2_cell_udf(lon: Column, lat: Column, level: int = 12) -> Column:
         return pd.Series(s2_cell_np(lon_s.to_numpy(), lat_s.to_numpy(), level))
 
     return _s2(lon, lat)
-
-
-def cell_h3_udf(lon: Column, lat: Column, res: int) -> Column:  # pragma: no cover
-    """Real-H3 assignment when the h3 wheel is available (import-gated)."""
-    if not HAVE_H3:
-        raise ImportError("h3 package not installed; use ghcell() instead")
-
-    @F.pandas_udf("string")
-    def _h3c(lon_s: pd.Series, lat_s: pd.Series) -> pd.Series:
-        return pd.Series(
-            [_h3.latlng_to_cell(la, lo, res) for lo, la in zip(lon_s, lat_s)]
-        )
-
-    return _h3c(lon, lat)
 
 
 # ---------------------------------------------------------------------------

@@ -216,23 +216,6 @@ def harvest_rows_pdf(
     )
 
 
-def harvest_pages_fused_pandas(
-    pages: DataFrame, md_modified: str | None = None
-) -> DataFrame:
-    """The mapInPandas variant of the fused harvest (kept as the equality
-    twin for harvest_pages_fused; measured 0.84-0.94x slower than the
-    mapInArrow path on the bench corpus — html blobs get materialized
-    into a pandas object array on input and the struct rows re-walked
-    from a pandas object column on output)."""
-    from .schema import NORMALIZED_SCHEMA
-
-    def _map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield harvest_rows_pdf(pdf["url"], pdf["html"], md_modified)
-
-    return pages.select("url", "html").mapInPandas(_map, NORMALIZED_SCHEMA)
-
-
 def harvest_pages_fused(
     pages: DataFrame, md_modified: str | None = None
 ) -> DataFrame:

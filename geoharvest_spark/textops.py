@@ -217,37 +217,18 @@ def hash_split(
     return df.withColumn("split", expr)
 
 
-def _gram_array(toks: Column, n: int) -> Column:
-    """n-gram string array from a token array (empty when too short).
-
-    NOTE (r8): building the gram STRINGS inside this higher-order
-    transform runs interpreted (HOFs are CodegenFallback) — measured
-    13 µs/gram vs ~2 µs when the gram is built by a plain projection
-    after exploding the POSITIONS (_gram_positions below). Keep this
-    array form only where a per-row array is genuinely needed."""
-    return F.when(
-        F.size(toks) >= n,
-        F.transform(
-            F.sequence(F.lit(0), F.size(toks) - n),
-            lambda i: F.concat_ws(
-                " ", *[F.element_at(toks, i + j + 1) for j in range(n)]
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-
-
 def _gram_positions(toks: Column, n: int) -> Column:
     """0-based n-gram start positions (empty when too short) — ints only.
 
     The r8 gram-stream shape: explode THESE (cheap int array), then build
     each gram with a plain codegen projection over the staged token array
     (`concat_ws(' ', slice(toks, p + 1, n))`) — 5.5x faster than exploding
-    _gram_array's interpreted-HOF strings (0.9 s vs 4.9 s for 11.5M
-    8-grams at 250k docs). Use explode_outer + an isNotNull filter on the
-    exploded position, NOT a plain explode: the plain generator's inferred
-    size>0 filter re-evaluates the generator input below the staging
-    projection (CLAUDE.md trap), while the outer variant carries no
-    inferred filter."""
+    gram strings built inside a transform() HOF, which runs interpreted
+    (0.9 s vs 4.9 s for 11.5M 8-grams at 250k docs). Use explode_outer +
+    an isNotNull filter on the exploded position, NOT a plain explode: the
+    plain generator's inferred size>0 filter re-evaluates the generator
+    input below the staging projection (the inline-split trap), while the
+    outer variant carries no inferred filter."""
     return F.when(
         F.size(toks) >= n, F.sequence(F.lit(0), F.size(toks) - n)
     ).otherwise(F.expr("cast(array() as array<int>)"))
@@ -455,12 +436,12 @@ def chunk_dedup(
     unique prose survives) expressed on a whitespace-token stream.
 
     Plan shape — first-wins WITHOUT a global sort: chunks are exploded with
-    their position, hashed (md5), and the keeper per hash is a plain
-    ``groupBy(hash).agg(min(struct(doc_id, chunk_idx)))`` — a two-stage
-    hash aggregate, not a window over a sort. Survivors re-join on
-    (hash, doc_id, chunk_idx) (equi-join, broadcast-free, AQE-skew-safe)
-    and reassembly is one more hash aggregate per doc with an array_sort
-    on the (idx, chunk) pairs — per-DOC memory, never per-corpus.
+    their position and hashed (xxhash64); the keeper is the shared
+    ``_first_occurrence`` hash aggregate (min packed (doc_id, chunk_idx)
+    per duplicated hash), left-joined back by a shuffle-hash join
+    (broadcast-free, AQE-skew-safe), and reassembly is one more hash
+    aggregate per doc with an array_sort on the (idx, chunk) pairs —
+    per-DOC memory, never per-corpus.
 
     Returns (doc_id, n_chunks, n_kept, dedup_md5) where dedup_md5 is the
     md5 of the reassembled text — documents whose every chunk was seen
@@ -558,15 +539,8 @@ def _dedup_exploded_chunks(
     # the job — validate up front instead (ADVICE r7)
     _require_numeric_id(ex, id_col, "chunk dedup")
     ex = ex.cache()
-    # packed scalar keeper (see _pack_id_pos): a struct min would demote
-    # this corpus-wide aggregate to SortAggregate (full chunk-stream sort)
-    ck = _pack_id_pos(F.col(id_col), F.col("chunk_idx"))
-    keeper = ex.groupBy("h").agg(F.min(ck).alias("_keep_pk"))
-    # shuffle_hash: reuse the h-exchange from the keeper aggregate and
-    # skip the sort-merge sorts (see substring_span_dedup's dup join)
-    kept = ex.join(keeper.hint("shuffle_hash"), "h").where(
-        ck == F.col("_keep_pk")
-    )
+    joined, ck = _first_occurrence(ex, "h", id_col, "chunk_idx", None)
+    kept = joined.where(F.col("_keep").isNull() | (ck == F.col("_keep")))
     if totals is None:
         totals = ex.groupBy(id_col).agg(
             F.count(F.lit(1)).alias("n_chunks")
@@ -611,9 +585,11 @@ def cdc_chunk_dedup(
     (chunk_dedup finds nothing), but content-defined boundaries re-align
     immediately after the edit, so all downstream chunks still dedup.
 
-    Fully JVM-side: the gram hashes reuse substring_span_dedup's 60-bit
-    map-side hash (md5 of the chr(31)-joined slice, first 15 hex
-    digits — SQL-replayable). r8 boundary pass: the rolling hash is
+    Fully JVM-side: the boundary gram hash is CDC's own 60-bit map-side
+    hash (md5 of the chr(31)-joined slice, first 15 hex digits). It
+    defines the chunks, so the oracle replays the same spec in SQL
+    (substring_span_dedup's xxhash64 is only an equality carrier and
+    cannot stand in for it). r8 boundary pass: the rolling hash is
     computed on the EXPLODED position stream as a plain codegen
     projection (computing it inside the per-row cuts transform() ran
     interpreted — HOFs are CodegenFallback, ~13 us/gram, VERDICT r7 #7's
@@ -772,7 +748,7 @@ def ngram_jaccard_pairs(
 # from md5 prefixes. p = 2^31-1 (Mersenne) keeps every intermediate product
 # < 2^62, so the arithmetic is EXACT in int64 on both numpy and the DuckDB
 # oracle (a larger p silently wraps numpy int64 and overflow-errors DuckDB).
-_MINHASH_P = (1 << 31) - 1
+_MINHASH_P = 2**31 - 1
 
 
 def cooccurrence_counts(
@@ -1493,19 +1469,59 @@ def _require_numeric_id(df: DataFrame, id_col: str, op: str) -> None:
         )
 
 
-def _pack_id_pos(id_col, pos_col):
-    """Order-preserving (id, pos) -> decimal(38,0) pack: id * 2^32 + pos.
+def _pack_id_pos(id_col, pos_col, narrow: bool):
+    """Order-preserving (id, pos) -> scalar pack, so a min-keeper stays a
+    HASH aggregate (min over a struct demotes to SortAggregate: a full
+    sort of the exploded stream). Non-negative int32 pos only.
 
-    Valid for any long id and non-negative int32 pos (the full range
-    fits 10^38 with 10 digits to spare). Exists so min-keeper
-    aggregates stay HASH aggregates — min over a struct falls back to
-    SortAggregate (immutable buffer), a full sort of the exploded
-    stream. Numeric ids only (ANSI mode raises loudly otherwise).
-    """
+    ``narrow`` (every id in [0, 2^32)): long id * 2^31 + pos, at most
+    2^63 - 1 — a primitive buffer (decimal(38) buffers measured 2.8-5.8x
+    slower). Otherwise decimal(38,0) id * 2^32 + pos, valid for any long
+    id."""
+    if narrow:
+        return id_col * F.lit(1 << 31).cast("long") + pos_col
     return (
         id_col.cast("decimal(38,0)") * F.lit(4294967296).cast("decimal(38,0)")
         + pos_col.cast("decimal(38,0)")
     ).cast("decimal(38,0)")
+
+
+def _first_occurrence(
+    occ: DataFrame,
+    key: str,
+    id_col: str,
+    pos_col: str,
+    broadcast_threshold: int | None,
+) -> tuple[DataFrame, Column]:
+    """First-wins keeper: ``occ`` left-joined with ``_keep`` = the min
+    packed (id, pos) of every ``key`` that occurs more than once (NULL
+    for singleton keys), plus the pack column to compare it with.
+
+    With ``broadcast_threshold`` set, two eager jobs run: an id-range
+    probe (which materializes a cached ``occ``) picks the long pack, and
+    a census of the cached keeper picks a broadcast join (<= threshold
+    keys: flat per-row map work) or a shuffle-hash join. ``None`` stays
+    lazy: decimal pack and a shuffle-hash join that reuses the keeper's
+    ``key`` exchange (never a sort-merge sort; a hot key is one hash
+    entry, so the output is linear in occurrences)."""
+    narrow = False
+    if broadcast_threshold is not None:
+        r = occ.agg(F.min(id_col).alias("lo"), F.max(id_col).alias("hi")).first()
+        narrow = r["lo"] is not None and r["lo"] >= 0 and r["hi"] < 1 << 32
+    pk = _pack_id_pos(F.col(id_col), F.col(pos_col), narrow)
+    keeper = (
+        occ.groupBy(key)
+        .agg(F.min(pk).alias("_keep"), F.count(F.lit(1)).alias("_cnt"))
+        .where(F.col("_cnt") > 1)
+        .select(key, "_keep")
+    )
+    if broadcast_threshold is not None and (
+        keeper.cache().count() <= broadcast_threshold
+    ):
+        keeper = F.broadcast(keeper)
+    else:
+        keeper = keeper.hint("shuffle_hash")
+    return occ.join(keeper, key, "left"), pk
 
 
 def substring_span_dedup(
@@ -1534,17 +1550,11 @@ def substring_span_dedup(
       2. every position's k-gram is hashed MAP-SIDE to a 64-bit int
          (``xxhash64`` over the token-array slice — no gram string is
          ever built) so the shuffle carries (hash, id, pos), never text;
-      3. the keeper per hash is an all-PRIMITIVE hash aggregate
-         (min(id), count) — long agg buffers stay in the codegen fast
-         path; struct/decimal buffers measured 2.8-5.8x slower (struct
-         demotes to SortAggregate outright: a full gram-stream sort);
-      4. duplicated occurrences come back via census-guarded BROADCAST
-         probes when dup keys <= ``broadcast_threshold`` (flat per-row
-         map work), else a shuffle-hash equi-join that reuses the
-         keeper's exchange (AQE-skew-safe; a boilerplate gram that
-         appears 10^6 times is one hot KEY, not a cross product — the
-         join output is linear in occurrences);
-      5. span merging is per-DOC array work (sort + linear fold), never a
+      3. the keeper per hash is one hash aggregate over a packed
+         (id, pos) scalar, joined back to mark every non-first
+         occurrence (``_first_occurrence``: broadcast or shuffle-hash,
+         never a sort);
+      4. span merging is per-DOC array work (sort + linear fold), never a
          corpus-wide sort.
     At extreme scale (>= 10^11 grams) widen step 2 to a 128-bit hash
     (collision odds ~n^2/2^65 at 64 bits); the hash never reaches the
@@ -1552,10 +1562,10 @@ def substring_span_dedup(
     only matters through collisions.
 
     ``broadcast_threshold``: max duplicated-gram KEYS for the broadcast
-    probe path; the census runs one eager job (which doubles as the occ
-    cache materialization). ``None`` skips the census and stays fully
-    lazy on the shuffle-hash fallback. Both paths are semantically
-    identical (pinned by test).
+    join; its eager probe and census double as the occ cache
+    materialization. ``None`` skips them and stays fully lazy on the
+    shuffle-hash join. Both paths are semantically identical (pinned by
+    test).
 
     Returns (id, n_tokens, n_spans, tokens_removed, tokens_kept[,
     clean_md5]) — clean_md5 is md5 of the surviving tokens space-joined
@@ -1595,98 +1605,10 @@ def substring_span_dedup(
         .select("id", "pos", gh.alias("gh"))
         .cache()
     )
-    # keeper, census-guarded (the cap_per_key discipline):
-    # COMMON PATH — duplicated-gram KEYS are few (clean-ish corpora):
-    #   one all-primitive hash aggregate (long buffers stay in the fast
-    #   codegen path; a struct or decimal(38) buffer measured 2.8-5.8x
-    #   slower and super-linear under memory pressure), then a broadcast
-    #   probe over the cached occ marking every non-keeper occurrence.
-    #   Broadcast probes are flat per-row map work (measured 0.4 s/93M
-    #   grams vs 13.4 s for a re-shuffle). r8: when ids fit uint32
-    #   (one column-pruned aggregate over the doc ids decides — gram
-    #   positions are int32 by construction), the keeper is
-    #   min(id*2^31 + pos) — an EXACT lexicographic (id, pos) argmin in
-    #   one long buffer, max value 2^63-1 — which folds the old second
-    #   pass (min pos within the min doc) into the keeper aggregate and
-    #   saves one full scan of the cached gram stream (~2.6-3.7 s at
-    #   23M grams). Wider ids keep the two-probe shape.
-    # FALLBACK — census above ``broadcast_threshold`` dup keys (heavily
-    #   duplicated corpora) or ``broadcast_threshold=None`` (fully lazy):
-    #   decimal(38,0)-packed (id,pos) keeper (order-preserving for the
-    #   full long id range) + shuffle_hash probe that reuses the
-    #   keeper's gh exchange — never a sort-merge sort, never a
-    #   driver-sized broadcast.
-    # The census count doubles as the occ cache materialization (work
-    # the op needs anyway), so the eager job is not wasted.
-    # the id-range probe only runs when the census will run anyway —
-    # broadcast_threshold=None keeps the documented fully-lazy contract
-    pack_ok = False
-    if broadcast_threshold is not None:
-        idr = base.agg(
-            F.min("id").alias("lo"), F.max("id").alias("hi")
-        ).first()
-        pack_ok = (
-            idr["lo"] is not None
-            and int(idr["lo"]) >= 0
-            and int(idr["hi"]) < (1 << 32)
-        )
-    if pack_ok:
-        pkl = F.col("id") * F.lit(1 << 31).cast("long") + F.col("pos")
-        dg = (
-            occ.groupBy("gh")
-            .agg(F.min(pkl).alias("keep_pkl"), F.count(F.lit(1)).alias("cnt"))
-            .where(F.col("cnt") > 1)
-            .select("gh", "keep_pkl")
-        )
-    else:
-        dg = (
-            occ.groupBy("gh")
-            .agg(F.min("id").alias("kid"), F.count(F.lit(1)).alias("cnt"))
-            .where(F.col("cnt") > 1)
-            .select("gh", "kid")
-        )
-    use_broadcast = False
-    if broadcast_threshold is not None:
-        dg = dg.cache()
-        use_broadcast = dg.count() <= broadcast_threshold
-    if use_broadcast and pack_ok:
-        pkl = F.col("id") * F.lit(1 << 31).cast("long") + F.col("pos")
-        dup = (
-            occ.join(F.broadcast(dg), "gh")
-            .where(pkl != F.col("keep_pkl"))
-            .select("id", "pos")
-        )
-    elif use_broadcast:
-        kpos = (
-            occ.join(F.broadcast(dg), "gh")
-            .where(F.col("id") == F.col("kid"))
-            .groupBy("gh", "kid")
-            .agg(F.min("pos").alias("kpos"))
-        )
-        dup = (
-            occ.join(F.broadcast(kpos), "gh")
-            .where(
-                (F.col("id") != F.col("kid"))
-                | (F.col("pos") != F.col("kpos"))
-            )
-            .select("id", "pos")
-        )
-    else:
-        pk = _pack_id_pos(F.col("id"), F.col("pos"))
-        keeper = occ.groupBy("gh").agg(
-            F.min(pk).alias("keep_pk"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-        dup = (
-            occ.join(
-                keeper.where(F.col("cnt") > 1)
-                .select("gh", "keep_pk")
-                .hint("shuffle_hash"),
-                "gh",
-            )
-            .where(pk != F.col("keep_pk"))
-            .select("id", "pos")
-        )
+    # every non-first occurrence of a duplicated gram (the != filter
+    # turns the keeper's left join into an inner join)
+    joined, pk = _first_occurrence(occ, "gh", "id", "pos", broadcast_threshold)
+    dup = joined.where(pk != F.col("_keep")).select("id", "pos")
     # per-doc interval merge: sorted duplicate positions -> maximal spans
     # [s, e] (token indices, 0-based inclusive); contiguous-or-overlapping
     # spans coalesce (p <= last.e + 1).

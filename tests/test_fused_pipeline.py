@@ -4,11 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from geoharvest_spark.pipeline import (
-    harvest_pages,
-    harvest_pages_fused,
-    harvest_pages_fused_pandas,
-)
+from geoharvest_spark.pipeline import harvest_pages, harvest_pages_fused
 
 
 def _normalized_pdf(df):
@@ -24,27 +20,9 @@ def _normalized_pdf(df):
     )
 
 
-def test_arrow_equals_pandas_variant(spark, pages_small):
-    """mapInArrow serialization swap must be row-for-row identical to the
-    mapInPandas twin (same kernel, different crossing)."""
-    a = _normalized_pdf(harvest_pages_fused(pages_small))
-    b = _normalized_pdf(harvest_pages_fused_pandas(pages_small))
-    assert a.shape == b.shape and len(a) > 0
-    for col in a.columns:
-        assert (a[col].fillna("~") == b[col].fillna("~")).all(), col
-
-
 def test_fused_equals_staged(spark, pages_small):
-    staged = harvest_pages(pages_small).select(
-        "url", "identifier", "origin", "metadata_format", "event",
-        F.to_json("aardvark").alias("aard_json"),
-        F.to_json("error").alias("err_json"),
-    ).toPandas().sort_values("url").reset_index(drop=True)
-    fused = harvest_pages_fused(pages_small).select(
-        "url", "identifier", "origin", "metadata_format", "event",
-        F.to_json("aardvark").alias("aard_json"),
-        F.to_json("error").alias("err_json"),
-    ).toPandas().sort_values("url").reset_index(drop=True)
+    staged = _normalized_pdf(harvest_pages(pages_small))
+    fused = _normalized_pdf(harvest_pages_fused(pages_small))
     assert staged.shape == fused.shape
     for col in staged.columns:
         mism = (staged[col].fillna("~") != fused[col].fillna("~")).sum()

@@ -500,6 +500,14 @@ def test_substring_dedup_hash_agg_no_sorts(spark):
     assert "SortAggregate" not in p, p[:1500]
     assert "BroadcastHashJoin" in p, p[:1500]
     spark.catalog.clearCache()
+    # ids >= 2^32: same census + broadcast on the decimal(38,0) pack, and
+    # the decimal keeper is still a hash aggregate
+    wide = docs.selectExpr("doc_id + (1L << 40) AS doc_id", "text")
+    p = _plan(substring_span_dedup(wide, k=8, emit_clean=False))
+    assert "SortAggregate" not in p, p[:1500]
+    assert "BroadcastHashJoin" in p, p[:1500]
+    assert "decimal(38,0)" in p, p[:1500]
+    spark.catalog.clearCache()
     # fallback path (lazy / big-dup corpora): shuffle-hash, still no sort
     p = _plan(
         substring_span_dedup(

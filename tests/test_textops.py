@@ -891,13 +891,13 @@ def test_substring_span_dedup_plan_single_split(spark, docs):
     # exactly one split() in the optimized occurrence plan
     out = tx.substring_span_dedup(docs, k=8)
     plan = out._jdf.queryExecution().optimizedPlan().toString()
-    # one split per scan leg — dup-side occ, kpos-probe occ, the cached
-    # dup-gram census (InMemoryRelation prints its cached child plan, so
-    # each cache REFERENCE re-prints the one staged split), clean-text
-    # base — NOT one per gram reference (the 750x inline trap) and NOT
-    # re-evaluated by a pushed size(split(...)) filter. Execution reads
-    # the occ cache once (pinned in test_plans).
-    assert plan.count("split(") <= 5
+    # one split per scan leg — dup-side occ, the cached dup-gram census
+    # (InMemoryRelation prints its cached child plan, so each cache
+    # REFERENCE re-prints the one staged split; the census prints two),
+    # clean-text base — NOT one per gram reference (the 750x inline
+    # trap) and NOT re-evaluated by a pushed size(split(...)) filter.
+    # Execution reads the occ cache once (pinned in test_plans).
+    assert plan.count("split(") <= 4
     assert "Filter (size(split(" not in plan
 
 
@@ -1125,6 +1125,54 @@ def test_substring_dedup_paths_agree(spark):
     assert a == b
     assert a[4] == (0, 0, a[4][2])
     assert a[2][1] > 0 or a[1][1] > 0  # the shared substring was cut
+
+    # ids outside [0, 2^32): the long id*2^31+pos pack would overflow, so
+    # the census path must take the decimal pack and still let the
+    # smallest (negative) id win
+    import hashlib
+
+    def md5(t):
+        return hashlib.md5(t.encode()).hexdigest()
+
+    w = 1 << 40
+    texts = {
+        -7: "a b c d e f g h i j",
+        -2: "p q r s t u v w",
+        w + 1: "x a b c d e f g h i j y",
+        w + 2: "a b c d e f g h",
+        w + 3: "p q r s p q r s",
+    }
+    wide = spark.createDataFrame(
+        list(texts.items()), "doc_id long, text string"
+    )
+    paths = []
+    for bt in (4_000_000, None):
+        paths.append({
+            r["doc_id"]: (r["n_spans"], r["tokens_removed"], r["clean_md5"])
+            for r in substring_span_dedup(
+                wide, k=8, broadcast_threshold=bt
+            ).collect()
+        })
+        spark.catalog.clearCache()
+    assert paths[0] == paths[1] == {
+        -7: (0, 0, md5(texts[-7])),
+        -2: (0, 0, md5(texts[-2])),
+        w + 1: (1, 10, md5("x y")),
+        w + 2: (1, 8, md5("")),
+        w + 3: (0, 0, md5(texts[w + 3])),
+    }
+    chunks = {
+        r["doc_id"]: (r["n_chunks"], r["n_kept"], r["dedup_md5"])
+        for r in tx.chunk_dedup(wide, chunk_tokens=4).collect()
+    }
+    spark.catalog.clearCache()
+    assert chunks == {
+        -7: (3, 3, md5(texts[-7])),
+        -2: (2, 2, md5(texts[-2])),
+        w + 1: (3, 3, md5(texts[w + 1])),
+        w + 2: (2, 0, md5("")),
+        w + 3: (2, 0, md5("")),
+    }
 
 
 def test_cdc_chunk_dedup_insertion_robust(spark):
