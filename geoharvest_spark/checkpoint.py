@@ -24,8 +24,10 @@ import datetime as dt
 import os
 import urllib.parse
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from .functions import latest_per_key
 from .schema import CHECKPOINT_SCHEMA
@@ -43,9 +45,24 @@ class CheckpointStore:
             f.endswith(".parquet") for f in os.listdir(self.path)
         )
 
+    def _lineage_frame(self, rows: list[tuple]) -> DataFrame:
+        """Driver-built lineage rows as a DataFrame via an Arrow table.
+
+        ``createDataFrame(list)`` pickles the rows into a parallelized RDD
+        that Python workers re-serialize: a Python-worker job for a
+        handful of rows. A pandas frame takes the Arrow path only when it
+        is non-empty, so the rows go in as a pyarrow Table (a local
+        relation, no job)."""
+        names = CHECKPOINT_SCHEMA.fieldNames()
+        table = pa.Table.from_pylist(
+            [dict(zip(names, r)) for r in rows],
+            schema=to_arrow_schema(CHECKPOINT_SCHEMA),
+        )
+        return self.spark.createDataFrame(table, CHECKPOINT_SCHEMA)
+
     def log(self) -> DataFrame:
         if not self._exists():
-            return self.spark.createDataFrame([], CHECKPOINT_SCHEMA)
+            return self._lineage_frame([])
         return self.spark.read.schema(CHECKPOINT_SCHEMA).parquet(self.path)
 
     def current(self) -> DataFrame:
@@ -75,13 +92,16 @@ class CheckpointStore:
         status: str = "done",
         ts: dt.datetime | None = None,
     ) -> None:
-        """Append (partition_id, rows, bytes) metric rows."""
-        now = ts or dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
+        """Append (partition_id, rows, bytes) metric rows stamped ``ts``
+        (default: now). A naive ``ts`` is a UTC wall clock."""
+        now = ts or dt.datetime.now(dt.timezone.utc)
+        if now.tzinfo is None:
+            now = now.replace(tzinfo=dt.timezone.utc)
         rows = [
             (job_id, snapshot_id, pid, nrows, nbytes, status, now)
             for pid, nrows, nbytes in metrics
         ]
-        df = self.spark.createDataFrame(rows, CHECKPOINT_SCHEMA)
+        df = self._lineage_frame(rows)
         df.coalesce(1).write.mode("append").parquet(self.path)
 
     def pending(
@@ -89,7 +109,10 @@ class CheckpointStore:
         partition_col: str = "partition_id",
     ) -> DataFrame:
         """Resume filter: drop rows whose partition is already done
-        (anti-join — never a broadcast collect to the driver)."""
+        (anti-join — never a broadcast collect to the driver). With no
+        lineage yet nothing is done, so ``work`` comes back unchanged."""
+        if not self._exists():
+            return work
         done = self.completed_partitions(job_id, snapshot_id)
         return work.join(
             done.withColumnRenamed("partition_id", partition_col),
@@ -128,12 +151,12 @@ def run_with_checkpoint(
     mark done. Re-running after a crash re-does only unfinished partitions.
     """
     todo = store.pending(work, job_id, snapshot_id, partition_col)
-    if todo.isEmpty():
-        return spark.read.parquet(f"{out_dir}/data")
     attempted = {
         int(r[partition_col])
         for r in todo.select(partition_col).distinct().collect()
     }
+    if not attempted:
+        return spark.read.parquet(f"{out_dir}/data")
     # Dynamic overwrite only replaces partitions PRESENT in the new result:
     # if a crashed prior attempt wrote rows for a pending partition and this
     # run legitimately emits zero rows for it, the stale rows would survive,

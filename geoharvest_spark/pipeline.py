@@ -164,11 +164,11 @@ def harvest_rows_list(
 ) -> list[dict]:
     """The fused harvest kernel over plain Python sequences -> row dicts.
 
-    Shared by the Spark operators (harvest_pages_fused per pandas batch,
-    harvest_pages_fused_arrow per Arrow batch) and the driver-side oracle
-    staging path — so the DuckDB correctness gate compares distributed
-    execution against a single-process run of the SAME kernel, catching
-    partitioning/serialization divergence.
+    Shared by the Spark operator (harvest_pages_fused, once per Arrow
+    batch of its mapInArrow) and the driver-side oracle staging path
+    (harvest_rows_pdf) — so the DuckDB correctness gate compares
+    distributed execution against a single-process run of the SAME
+    kernel, catching partitioning/serialization divergence.
     """
     from .normalize import DEFAULT_MD_MODIFIED, normalize_record
     from .normalize.base import AARDVARK_FIELDS

@@ -152,7 +152,11 @@ def write_tile_tables(
     Partitioned by res (partition pruning on pyramid level); within each
     res, files range-ordered by cell — the parquet analog of an Iceberg
     sort order, so tile lookups touch few files.
+
+    ``assigned`` is evaluated once (eager localCheckpoint): both tables
+    read it, and each would otherwise re-run its lineage, S2 UDF included.
     """
+    assigned = assigned.localCheckpoint(eager=True)
     (
         assigned.repartitionByRange(F.col("res"), F.col("cell"))
         .write.mode(mode)

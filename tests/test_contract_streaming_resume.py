@@ -76,7 +76,7 @@ def test_checkpoint_resume_idempotent(spark, entrymod):
 
 def test_checkpoint_resume_third_run_noop(spark, entrymod):
     """A third run over the same lineage is a no-op: run_with_checkpoint
-    short-circuits when nothing is pending (isEmpty branch)."""
+    short-circuits when no partition is pending (empty pending-id set)."""
     import tempfile
 
     from geoharvest_spark.checkpoint import CheckpointStore, run_with_checkpoint

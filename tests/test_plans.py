@@ -184,6 +184,21 @@ def test_checkpoint_pending_is_anti_join(spark, tmp_path):
     assert "LeftAnti" in plan
 
 
+def test_checkpoint_pending_without_lineage_is_work(spark, tmp_path):
+    """With no lineage yet nothing is done: pending returns the work rows
+    as they are, with no join and no scan of an empty log."""
+    from geoharvest_spark.checkpoint import CheckpointStore
+
+    store = CheckpointStore(spark, str(tmp_path / "lineage"))
+    work = spark.range(100).select(
+        F.col("id").alias("event_id"), (F.col("id") % 8).cast("int").alias("partition_id")
+    )
+    todo = store.pending(work, "j", "s")
+    assert sorted(todo.collect()) == sorted(work.collect())
+    plan = _plan(todo)
+    assert "Join" not in plan and "ExistingRDD" not in plan
+
+
 def test_chunk_dedup_no_global_sort(spark):
     # first-wins keeper must be a hash aggregate (min-struct), never a
     # window over a global sort — the sort would be corpus-wide at 100 TB

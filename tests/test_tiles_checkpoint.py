@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import datetime as dt
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -75,11 +77,27 @@ def test_tile_rollup_envelope(assigned):
 def test_write_tile_tables(tmp_path, assigned, spark):
     tiles, _ = assigned
     write_tile_tables(tiles, str(tmp_path))
+    assert tiles.is_cached  # the caller's cache is left alone
     back = spark.read.parquet(str(tmp_path / "tile_rollup"))
     assert back.where(F.col("res") == 7).count() > 0
     assert {f.name for f in back.schema.fields} >= {
         "cell", "n_records", "w", "e", "n", "s", "res",
     }
+    # both tables hold exactly the rows of their source frame (multisets)
+    got = spark.read.parquet(str(tmp_path / "tile_assignments")).select(
+        *tiles.columns
+    )
+    assert got.count() == tiles.count()
+    assert got.exceptAll(tiles).count() == 0 == tiles.exceptAll(got).count()
+    key = ["res", "cell"]
+    want = tile_rollup(tiles).toPandas().sort_values(key).reset_index(drop=True)
+    roll = back.select(*want.columns).toPandas().sort_values(key)
+    roll = roll.reset_index(drop=True)
+    exact = ["res", "cell", "n_records", "w", "e", "n", "s"]
+    assert roll[exact].equals(want[exact])
+    # centroids are double averages: summation order may differ by an ulp
+    for c in ("centroid_lon", "centroid_lat"):
+        assert np.allclose(roll[c], want[c], rtol=0, atol=1e-9)
 
 
 def test_checkpoint_resume(tmp_path, spark):
@@ -115,14 +133,33 @@ def test_checkpoint_resume(tmp_path, spark):
 
 
 def test_checkpoint_last_status_wins(tmp_path, spark):
-    import datetime as dt
-
     store = CheckpointStore(spark, str(tmp_path / "lineage2"))
     t0 = dt.datetime(2024, 1, 1)
     store.mark("j", "s", [(0, 5, 5)], status="running", ts=t0)
     store.mark("j", "s", [(0, 10, 10)], status="done", ts=t0 + dt.timedelta(1))
     cur = store.current().collect()
     assert len(cur) == 1 and cur[0]["status"] == "done" and cur[0]["rows"] == 10
+
+
+@pytest.mark.parametrize("tz", [None, dt.timezone.utc])
+def test_checkpoint_mark_ts_is_utc(tmp_path, spark, tz):
+    """A naive ts is a UTC wall clock, stored the same as the aware UTC
+    ts; microseconds survive."""
+    store = CheckpointStore(spark, str(tmp_path / "lineage_ts"))
+    t0 = dt.datetime(2024, 3, 10, 12, 30, 0, 123456, tzinfo=tz)
+    store.mark("j", "s", [(0, 5, 5)], ts=t0)
+    cur = store.current().toPandas()  # session time zone is UTC
+    assert len(cur) == 1
+    assert cur.updated_ts[0].to_pydatetime() == t0.replace(tzinfo=None)
+
+
+def test_checkpoint_mark_no_metrics_appends_nothing(tmp_path, spark):
+    store = CheckpointStore(spark, str(tmp_path / "lineage_empty"))
+    store.mark("j", "s", [])
+    assert store.log().count() == 0
+    store.mark("j", "s", [(0, 5, 5)])
+    store.mark("j", "s", [])
+    assert store.log().count() == 1
 
 
 def test_checkpoint_zero_output_partition_marked_done(tmp_path, spark):
