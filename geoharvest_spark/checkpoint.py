@@ -93,7 +93,11 @@ class CheckpointStore:
         ts: dt.datetime | None = None,
     ) -> None:
         """Append (partition_id, rows, bytes) metric rows stamped ``ts``
-        (default: now). A naive ``ts`` is a UTC wall clock."""
+        (default: now). A naive ``ts`` is a UTC wall clock. No metrics
+        write nothing: an empty part file would make ``_exists()`` true
+        and ``pending`` anti-join against a log with no rows."""
+        if not metrics:
+            return
         now = ts or dt.datetime.now(dt.timezone.utc)
         if now.tzinfo is None:
             now = now.replace(tzinfo=dt.timezone.utc)

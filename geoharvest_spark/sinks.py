@@ -19,9 +19,10 @@ from __future__ import annotations
 import json
 from typing import Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .functions import latest_per_key
 from .schema import AARDVARK_FIELDS
@@ -30,56 +31,49 @@ _EXT = {"fgdc": "xml", "iso19139": "xml", "marc": "xml",
         "gbl1": "json", "aardvark": "json"}
 
 
+def _jsonl_line(rec: dict | None) -> str | None:
+    """The to_dict()-equivalent JSON line of one aardvark record: keys in
+    AARDVARK_FIELDS order, None values and empty lists dropped."""
+    if rec is None:
+        return None
+    return json.dumps(
+        {k: rec[k] for k in AARDVARK_FIELDS if rec.get(k) is not None and rec[k] != []}
+    )
+
+
+def _jsonl_array(recs: pa.Array) -> pa.Array:
+    return pa.array([_jsonl_line(r) for r in recs.to_pylist()], pa.string())
+
+
 def aardvark_jsonl_col(df: DataFrame, aardvark_col: str = "aardvark") -> DataFrame:
     """Add `jsonl`: the to_dict()-equivalent JSON line per record."""
 
-    def _map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            lines = []
-            for rec in pdf[aardvark_col]:
-                if rec is None:
-                    lines.append(None)
-                    continue
-                # Arrow structs arrive with numpy arrays for list fields —
-                # emptiness must be checked via len(), not `== []`
-                d = {
-                    k: rec[k]
-                    for k in AARDVARK_FIELDS
-                    if rec.get(k) is not None
-                    and not (
-                        not isinstance(rec.get(k), str)
-                        and hasattr(rec.get(k), "__len__")
-                        and len(rec.get(k)) == 0
-                    )
-                }
-                # numpy arrays from Arrow -> plain lists for json
-                d = {
-                    k: (list(v) if isinstance(v, (list, tuple)) or hasattr(v, "tolist") else v)
-                    for k, v in d.items()
-                }
-                d = {
-                    k: ([x.item() if hasattr(x, "item") else x for x in v]
-                        if isinstance(v, list) else
-                        (v.item() if hasattr(v, "item") else v))
-                    for k, v in d.items()
-                }
-                lines.append(json.dumps(d))
-            pdf = pdf.copy()
-            pdf["jsonl"] = lines
-            yield pdf
+    def _map(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            yield pa.RecordBatch.from_arrays(
+                [*batch.columns, _jsonl_array(batch.column(aardvark_col))],
+                names=[*batch.schema.names, "jsonl"],
+            )
 
-    fields = [f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields]
-    return df.mapInPandas(_map, ", ".join(fields + ["jsonl string"]))
+    schema = T.StructType([*df.schema.fields, T.StructField("jsonl", T.StringType())])
+    return df.mapInArrow(_map, schema)
 
 
 def write_combined_jsonl(normalized_ok: DataFrame, out_path: str) -> None:
     """K1: the combined JSONL file (TIMDEX input format).
 
-    Distributed text write; for the literal single-file contract coalesce(1)
-    — at 100 TB the consumer reads the directory, not one file."""
+    Only the aardvark struct crosses into Python, and only the lines
+    come back. Distributed text write; for the literal single-file
+    contract coalesce(1) — at 100 TB the consumer reads the directory,
+    not one file."""
+
+    def _map(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            yield pa.RecordBatch.from_arrays([_jsonl_array(batch.column(0))], ["jsonl"])
+
     (
-        aardvark_jsonl_col(normalized_ok)
-        .select("jsonl")
+        normalized_ok.select("aardvark")
+        .mapInArrow(_map, "jsonl string")
         .where(F.col("jsonl").isNotNull())
         .write.mode("overwrite")
         .text(out_path)

@@ -23,6 +23,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -1053,6 +1054,44 @@ def simhash_near_dups(
     )
 
 
+def _cc_union_find(a: np.ndarray, b: np.ndarray) -> "tuple[np.ndarray, np.ndarray]":
+    """Driver-side connected components of the edges ``a[i]–b[i]``:
+    ``(ids, component)`` over the sorted distinct endpoints, where
+    ``component`` is the minimum id of each node's component.
+
+    Min-label hooking with pointer jumping over indices into the sorted
+    ids, so the minimum index is the minimum id. ``parent[x] <= x``
+    holds throughout (a root only ever hooks to a smaller label), so
+    the parent forest has no cycles and jumping ends at each tree's
+    minimum."""
+    ids, inv = np.unique(np.concatenate([a, b]), return_inverse=True)
+    ia, ib = inv[: len(a)], inv[len(a):]
+    parent = np.arange(len(ids))
+    while True:
+        ra, rb = parent[ia], parent[ib]
+        cross = ra != rb
+        if not cross.any():
+            return ids, ids[parent]
+        ra, rb = ra[cross], rb[cross]
+        m = np.minimum(ra, rb)
+        np.minimum.at(parent, ra, m)
+        np.minimum.at(parent, rb, m)
+        while True:
+            up = parent[parent]
+            if np.array_equal(up, parent):
+                break
+            parent = up
+
+
+def _driver_edge_cap(spark) -> int:
+    """Largest edge count connected_components finishes on the driver:
+    ``spark.sql.autoBroadcastJoinThreshold`` (the size Spark itself
+    collects to the driver for a broadcast) over 16 bytes per edge
+    (two longs). -1 (threshold disabled) means never."""
+    threshold = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    return threshold // 16 if threshold >= 0 else -1
+
+
 def connected_components(
     pairs: DataFrame,
     src: str = "id_a",
@@ -1060,11 +1099,12 @@ def connected_components(
     vertices: DataFrame | None = None,
     max_iter: int = 50,
 ) -> DataFrame:
-    """Distributed connected components over an undirected edge list,
-    via alternating large-star / small-star contraction (Kiveris et al.,
-    "Connected Components in MapReduce and Beyond", SoCC'14 — the
-    algorithm production corpus builds use to cluster near-dup pairs
-    before keeping one document per component).
+    """Connected components over an undirected edge list: distributed
+    rounds of alternating large-star / small-star contraction (Kiveris
+    et al., "Connected Components in MapReduce and Beyond", SoCC'14 —
+    the algorithm production corpus builds use to cluster near-dup
+    pairs before keeping one document per component) until the edge
+    set is driver-sized, then union-find on the driver.
 
     Returns ``(id, component)`` for every node that appears in ``pairs``
     (plus every id in ``vertices`` if given — isolated vertices map to
@@ -1082,10 +1122,21 @@ def connected_components(
     Each round localCheckpoints the contracted edges to truncate
     lineage, the same discipline GraphFrames applies.
 
+    Driver finish: every checkpoint (the first included) observes the
+    edge count n. Once n * 16 bytes fits
+    ``spark.sql.autoBroadcastJoinThreshold`` the edges are collected
+    through Arrow and ``_cc_union_find`` labels them; the result is a
+    local relation, so no further distributed round or job runs. A
+    threshold of -1 keeps every round distributed. Contraction keeps
+    both the node set and connectivity, so union-find on any round's
+    edge set yields the same minimum labels as the converged star
+    forest. ``max_iter`` bounds the distributed rounds only.
+
     Convergence test: per-round (row count, sum of xxhash64(a, b)) over
     the normalized edge set — one aggregation instead of a double
     exceptAll, with a collision probability ~2^-64 per round.
     """
+    spark = pairs.sparkSession
     e = (
         pairs.select(
             F.col(src).cast("long").alias("a"),
@@ -1122,9 +1173,32 @@ def connected_components(
         m = obs.get
         return out, (int(m["n"]), int(m["h"]))
 
+    cap = _driver_edge_cap(spark)
     e, prev = _ckpt_fp(e)
-    converged = False
-    for _ in range(max_iter):
+    for rounds in range(max_iter + 1):
+        if prev[0] <= cap:
+            t = e.toArrow()
+            ids, component = _cc_union_find(
+                t.column("a").to_numpy(), t.column("b").to_numpy()
+            )
+            comp = spark.createDataFrame(
+                pa.table({"id": ids, "component": component}),
+                "id long, component long",
+            )
+            break
+        if rounds == max_iter:
+            # The final label extraction assumes the edge set is a star
+            # forest; a non-converged edge set would silently assign
+            # wrong components (and near-dedup would then drop/keep the
+            # wrong documents). O(log^2 n) rounds suffice for any real
+            # graph, so exhausting max_iter means the caller set it far
+            # too low.
+            raise RuntimeError(
+                f"connected_components did not converge within max_iter="
+                f"{max_iter} rounds (last edge-set fingerprint {prev}); "
+                "raise max_iter — the star-forest extraction is invalid on "
+                "a non-converged edge set"
+            )
         # large-star: for every node u, link each LARGER neighbor v to
         # m(u) = min(neighborhood(u) + {u})
         both = e.select("a", "b").union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
@@ -1161,27 +1235,14 @@ def connected_components(
         )
         e, cur = _ckpt_fp(small)
         if cur == prev:
-            converged = True
+            # Fixed point is a star forest: every edge is (root=a,
+            # node=b) with a == component min. Roots map to themselves.
+            comp = e.select(F.col("b").alias("id"), F.col("a").alias("component")).union(
+                e.select(F.col("a").alias("id"), F.col("a").alias("component"))
+            ).groupBy("id").agg(F.min("component").alias("component"))
             break
         prev = cur
-    if not converged:
-        # The final label extraction assumes the edge set is a star
-        # forest; a non-converged edge set would silently assign wrong
-        # components (and near-dedup would then drop/keep the wrong
-        # documents). O(log^2 n) rounds suffice for any real graph, so
-        # exhausting max_iter means the caller set it far too low.
-        raise RuntimeError(
-            f"connected_components did not converge within max_iter="
-            f"{max_iter} rounds (last edge-set fingerprint {prev}); "
-            "raise max_iter — the star-forest extraction is invalid on "
-            "a non-converged edge set"
-        )
 
-    # Fixed point is a star forest: every edge is (root=a, node=b) with
-    # a == component min. Roots map to themselves.
-    comp = e.select(F.col("b").alias("id"), F.col("a").alias("component")).union(
-        e.select(F.col("a").alias("id"), F.col("a").alias("component"))
-    ).groupBy("id").agg(F.min("component").alias("component"))
     if vertices is not None:
         vcol = vertices.columns[0]
         iso = (

@@ -64,15 +64,16 @@ def main() -> None:
         return
 
     # checkpointed, partition-idempotent run: partition by a deterministic
-    # url-hash bucket; resume skips completed buckets
+    # url-hash bucket; resume skips completed buckets. The bucket is a
+    # function of url alone, so the harvest output recomputes it rather
+    # than joining it back from the input.
     store = CheckpointStore(spark, f"{args.output}/lineage")
-    work = pages.withColumn(
-        "partition_id", F.pmod(F.xxhash64("url"), F.lit(args.partitions)).cast("int")
-    )
+    bucket = F.pmod(F.xxhash64("url"), F.lit(args.partitions)).cast("int")
+    work = pages.withColumn("partition_id", bucket)
     todo = store.pending(work, args.job_id, args.snapshot_id)
 
-    normalized = harvest_pages_fused(todo, args.md_modified).join(
-        todo.select("url", "partition_id"), "url"
+    normalized = harvest_pages_fused(todo, args.md_modified).withColumn(
+        "partition_id", bucket
     )
     normalized.cache()
     ok, failed = split_failed(normalized)

@@ -3,6 +3,8 @@ driver-provided documents/embeddings tables (sf0.001)."""
 
 from __future__ import annotations
 
+import contextlib
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -432,6 +434,27 @@ def _cc_brute(edges):
     return {x: find(x) for x in parent}
 
 
+@contextlib.contextmanager
+def _cc_distributed(spark):
+    """Threshold -1 keeps every connected_components round distributed
+    (no driver union-find finish)."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
+
+
+def _on_both_cc_paths(spark, run):
+    """``[run() at the default threshold (small graphs finish on the
+    driver), run() with every round distributed]``."""
+    local = run()
+    with _cc_distributed(spark):
+        return [local, run()]
+
+
 def test_connected_components_chain_clique_vstruct(spark):
     edges = [
         (1, 2), (2, 3), (3, 4),          # chain
@@ -441,13 +464,13 @@ def test_connected_components_chain_clique_vstruct(spark):
         (40, 3),                         # late link into the chain
     ]
     df = spark.createDataFrame(edges, ["id_a", "id_b"])
-    got = {
+    for got in _on_both_cc_paths(spark, lambda: {
         r["id"]: r["component"]
         for r in tx.connected_components(df).collect()
-    }
-    assert got == _cc_brute(edges)
-    # the v-structure clusters 20 and 21 together (greedy drop-id_b misses this)
-    assert got[20] == got[21] == got[22] == 20
+    }):
+        assert got == _cc_brute(edges)
+        # the v-structure clusters 20 and 21 together (greedy drop-id_b misses this)
+        assert got[20] == got[21] == got[22] == 20
 
 
 def test_connected_components_long_chain_few_rounds(spark):
@@ -455,9 +478,11 @@ def test_connected_components_long_chain_few_rounds(spark):
     within the O(log^2 n) round cap, not O(diameter)."""
     edges = [(i, i + 1) for i in range(200)]
     df = spark.createDataFrame(edges, ["id_a", "id_b"])
-    out = tx.connected_components(df, max_iter=12).toPandas()
-    assert set(out["component"]) == {0}
-    assert len(out) == 201
+    for out in _on_both_cc_paths(
+        spark, lambda: tx.connected_components(df, max_iter=12).toPandas()
+    ):
+        assert set(out["component"]) == {0}
+        assert len(out) == 201
 
 
 def test_connected_components_vertices_and_direction(spark):
@@ -621,10 +646,15 @@ def test_connected_components_giant_hub_no_collect_list(spark):
     chain = [(30_001 + i, 30_002 + i) for i in range(50)]  # welded chain
     edges = hub_edges + [(30_001, 30_001 + 1 + 0)] + chain
     df = spark.createDataFrame(edges, ["id_a", "id_b"]).repartition(16)
-    out = tx.connected_components(df, max_iter=10)
-    comps = out.select("component").distinct().collect()
-    assert [r["component"] for r in comps] == [0]
-    assert out.count() == 30_051  # {0} + {2..30001} + {30002..30051}
+
+    def run():
+        out = tx.connected_components(df, max_iter=10)
+        comps = out.select("component").distinct().collect()
+        return [r["component"] for r in comps], out.count()
+
+    for comps, n in _on_both_cc_paths(spark, run):
+        assert comps == [0]
+        assert n == 30_051  # {0} + {2..30001} + {30002..30051}
 
 
 def test_redact_pii_progressive_counts_equal_emitted_tokens(spark):
@@ -659,10 +689,81 @@ def test_connected_components_max_iter_exhaustion_raises(spark):
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(60)], ["id_a", "id_b"]
     )
-    with pytest.raises(RuntimeError, match="did not converge"):
+    with _cc_distributed(spark), pytest.raises(RuntimeError, match="did not converge"):
         tx.connected_components(chain, max_iter=1)
     ok = tx.connected_components(chain).toPandas()
     assert (ok["component"] == 0).all() and len(ok) == 61
+    # at the default threshold the 60 edges finish on the driver, which
+    # is exact whatever round the distributed contraction reached
+    local = tx.connected_components(chain, max_iter=1).toPandas()
+    assert (local["component"] == 0).all() and len(local) == 61
+
+
+def _cc_random_graph(rng):
+    """One seeded edge list: chains in permuted id order, stars,
+    duplicate and reversed edges, self-loops (one on a node with no
+    other edge), null endpoints, negative ids and ids >= 2^53."""
+    pool = np.concatenate([
+        rng.integers(-1000, 1000, 40),
+        rng.integers(2**53, 2**62, 20),
+        -rng.integers(2**53, 2**62, 10),
+    ])
+    pool = rng.permutation(np.unique(pool)).tolist()
+    edges, i = [], 0
+    while i < len(pool) - 1:
+        size = int(rng.integers(2, 12))
+        group = pool[i:i + size]
+        if rng.random() < 0.5:  # chain in permuted id order
+            edges += list(zip(group[:-1], group[1:]))
+        else:  # star around a random member
+            hub = group[int(rng.integers(len(group)))]
+            edges += [(hub, x) for x in group if x != hub]
+        i += size
+    edges += [(b, a) for a, b in edges[: len(edges) // 3]]  # reversed
+    edges += edges[: len(edges) // 4]  # duplicates
+    edges += [(x, x) for x in pool[:5]] + [(5 * 2**60, 5 * 2**60)]
+    edges += [(None, pool[0]), (pool[1], None), (None, None)]
+    return edges
+
+
+@pytest.mark.parametrize("seed", [0, 1, 2])
+def test_connected_components_paths_agree_with_union_find(spark, seed):
+    """Driver finish == all-distributed rounds == pure-Python union-find,
+    on seeded graphs covering the id and edge shapes CC must normalize,
+    with and without ``vertices`` (isolated ids included) and on an
+    empty edge set."""
+    edges = _cc_random_graph(np.random.default_rng(seed))
+    df = spark.createDataFrame(edges, "id_a long, id_b long")
+    empty = spark.createDataFrame([], "id_a long, id_b long")
+    ids = {x for e in edges for x in e if x is not None} | {2**62 + 7, -(2**62) - 3}
+    verts = spark.createDataFrame([(x,) for x in ids], "doc_id long")
+    want = _cc_brute([(a, b) for a, b in edges if None not in (a, b) and a != b])
+    want_v = {x: want.get(x, x) for x in ids}
+
+    def run():
+        return [
+            {r["id"]: r["component"] for r in out.collect()}
+            for out in (
+                tx.connected_components(df),
+                tx.connected_components(df, vertices=verts),
+                tx.connected_components(empty, vertices=verts),
+            )
+        ]
+
+    local, dist = _on_both_cc_paths(spark, run)
+    assert local == dist == [want, want_v, {x: x for x in ids}]
+
+
+def test_connected_components_small_graph_is_local_relation(spark):
+    """A driver-sized edge set finishes in a union-find on the driver:
+    the result is a local relation, with no exchange left to run."""
+    df = spark.createDataFrame([(1, 2), (2, 3), (7, 9)], ["id_a", "id_b"])
+    out = tx.connected_components(df)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "Exchange" not in plan
+    assert sorted(map(tuple, out.collect())) == [
+        (1, 1), (2, 1), (3, 1), (7, 7), (9, 7)
+    ]
 
 
 def test_cap_per_key_hot_key_bounded_and_exact(spark):

@@ -154,9 +154,15 @@ def test_checkpoint_mark_ts_is_utc(tmp_path, spark, tz):
 
 
 def test_checkpoint_mark_no_metrics_appends_nothing(tmp_path, spark):
-    store = CheckpointStore(spark, str(tmp_path / "lineage_empty"))
+    path = tmp_path / "lineage_empty"
+    store = CheckpointStore(spark, str(path))
     store.mark("j", "s", [])
+    assert not path.exists()
     assert store.log().count() == 0
+    work = spark.range(10).withColumn("partition_id", F.col("id").cast("int"))
+    todo = store.pending(work, "j", "s")
+    assert "Join" not in todo._jdf.queryExecution().optimizedPlan().toString()
+    assert todo.count() == 10
     store.mark("j", "s", [(0, 5, 5)])
     store.mark("j", "s", [])
     assert store.log().count() == 1
