@@ -490,12 +490,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         pts = _points(spark, sf).withColumnRenamed("event_id", "point_id")
         polys = _nation_boxes(spark, sf)
-        # nation boxes tile the WHOLE world: the cover-cell prefilter can
-        # prune nothing and is pure fixed overhead here (r8: measured
-        # +0.2-0.5 s) — disabled for this query only.
-        out = pip_join(
-            pts, polys, res=4, rows_per_task=5000, cell_prefilter=False
-        )
+        out = pip_join(pts, polys, res=4, rows_per_task=5000)
         return (
             out.groupBy("poly_id")
             .agg(F.count(F.lit(1)).alias("n_points"))
@@ -1186,9 +1181,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def raster_zonal_stats(spark, sf):
         # zonal statistics — the raster x vector JOIN (VERDICT r5 #3):
         # per-cell raster partials (pixels never shuffle) -> cell
-        # centers assigned to the nation-grid zones via the salted PIP
-        # machinery -> per-zone count/sum/mean. Cell centers are exact
-        # binary doubles (step 45/2^res), so the oracle reproduces the
+        # centers assigned to the nation-grid zones via pip_join ->
+        # per-zone count/sum/mean. Cell centers are exact binary doubles
+        # (step 45/2^res), so the oracle reproduces the
         # assignment with closed range predicates on the synthetic
         # axis-aligned zones — no geometry code oracle-side.
         from geoharvest_spark import raster as rst
@@ -2785,11 +2780,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def pip_skew_hot_cell(spark, sf):
         """Skew-stress for the salted PIP join (J3 under a pathological
         distribution): 50% of all points land in ONE res-5 cell, so the
-        census (joins.py:151-157, index.py:289-343) must assign the hot
-        cell salt_k ~ hot_count/rows_per_task and fan the build side out
-        accordingly — the unsalted plan would put half the probe table in
-        one task. rows_per_task=500 forces salt_k >= 10 at sf0.01. The
-        full operator runs (census, deterministic xxhash64 salt,
+        census (joins.pip_join, index.salt_factors) must assign the
+        hot cell salt_k ~ hot_count/rows_per_task and fan the build side
+        out accordingly — with every salt_k = 1 half the probe table would
+        land in one task. rows_per_task=500 forces salt_k >= 10 at sf0.01.
+        The full operator runs (census, deterministic xxhash64 salt,
         shuffle_hash equi-join, codegen bbox prefilter, ray-cast refine);
         the oracle is a plain closed-bounds rectangle join — exact
         because no point sits within 5e-5 of any rect boundary. The
@@ -2801,7 +2796,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             _skew_rects_df(spark),
             res=5,
             rows_per_task=500,
-            salted=True,
         )
         return out.select("point_id", "poly_id").orderBy("point_id", "poly_id")
 

@@ -138,10 +138,14 @@ def explode_bbox_cells(
 ) -> DataFrame:
     """One row per ghcell at `res` that the box [w, e] x [s, n] covers
     (corners clamped to the grid), as a new ``cell`` column. Two
-    sequence() explodes, so the cover stays JVM-side; w <= e and s <= n
-    (no antimeridian crossing)."""
+    sequence() explodes, so the cover stays JVM-side. A box with w > e
+    (antimeridian crossing) or s > n raises, as sequence() would count
+    down over the wrong cells; a null corner gives no cells."""
     x0, y0 = ghcell_xy(w, s, res)
     x1, y1 = ghcell_xy(e, n, res)
+    x1 = F.when((w > e) | (s > n), F.raise_error(F.lit(
+        "bbox with w > e or s > n (antimeridian-crossing or inverted)"
+    ))).otherwise(x1)
     return (
         df.withColumn("_x", F.explode(F.sequence(x0, x1)))
         .withColumn("_y", F.explode(F.sequence(y0, y1)))
@@ -332,26 +336,17 @@ def salt_factors(
     df: DataFrame,
     cell_col: str = "cell",
     rows_per_task: int = 100_000,
-    sample_fraction: float | None = None,
 ) -> DataFrame:
     """Census pass: per-cell row counts -> salt factor k = ceil(count/target).
 
     Deterministic (no RNG in the salt itself): the probe side later computes
     ``salt = pmod(xxhash64(row_key), k_cell)`` so a resumed/retried partition
-    produces identical assignments (SURVEY.md §7 hard-part #3).
-
-    ``sample_fraction``: at 100 TB an exact pre-count is a full extra scan;
-    a seeded sample (e.g. 0.01) estimates counts instead. Over/under-
-    estimating k only affects load balance, never correctness — the salted
-    equi-join is exact for any k >= 1. Returns DataFrame(cell, salt_k).
+    produces identical assignments (SURVEY.md §7 hard-part #3). Returns
+    DataFrame(cell, salt_k), one row per distinct cell: at most 32 * 4^res
+    rows at resolution res (32,768 at res 5), whatever the row count.
     """
-    src = df
-    scale = 1.0
-    if sample_fraction is not None and 0 < sample_fraction < 1:
-        src = df.sample(fraction=sample_fraction, seed=42)
-        scale = 1.0 / sample_fraction
-    return src.groupBy(cell_col).agg(
-        F.ceil(F.count(F.lit(1)) * F.lit(scale) / F.lit(rows_per_task))
+    return df.groupBy(cell_col).agg(
+        F.ceil(F.count(F.lit(1)) / F.lit(rows_per_task))
         .cast("int")
         .alias("salt_k")
     )
@@ -363,11 +358,10 @@ def with_salt(
     cell_col: str = "cell",
     key_col: str = "url",
 ) -> DataFrame:
-    """Probe side: attach deterministic salt in [0, salt_k) per row."""
-    return (
-        df.join(factors, cell_col, "left")
-        .withColumn("salt_k", F.coalesce(F.col("salt_k"), F.lit(1)))
-        .withColumn("salt", F.pmod(F.xxhash64(F.col(key_col)), F.col("salt_k")).cast("int"))
+    """Probe side: attach deterministic salt in [0, salt_k) per row. An
+    inner join: rows whose cell is not in ``factors`` drop out."""
+    return df.join(factors, cell_col).withColumn(
+        "salt", F.pmod(F.xxhash64(F.col(key_col)), F.col("salt_k")).cast("int")
     )
 
 
@@ -375,10 +369,10 @@ def explode_salts(
     df: DataFrame, factors: DataFrame, cell_col: str = "cell"
 ) -> DataFrame:
     """Build side: replicate each row salt_k times with salt = 0..salt_k-1 so
-    the (cell, salt) equi-join co-partitions without broadcasting."""
+    the (cell, salt) equi-join co-partitions without broadcasting. An
+    inner join: rows whose cell is not in ``factors`` drop out."""
     return (
-        df.join(factors, cell_col, "left")
-        .withColumn("salt_k", F.coalesce(F.col("salt_k"), F.lit(1)))
+        df.join(factors, cell_col)
         .withColumn("salt", F.explode(F.sequence(F.lit(0), F.col("salt_k") - 1)))
         .withColumn("salt", F.col("salt").cast("int"))
         .drop("salt_k")

@@ -8,11 +8,14 @@ PIP join
 1. build side: polygons explode to the grid cells covering their bbox at a
    fixed resolution (cover is a superset of the polygon, so no false
    negatives);
-2. census pass over point cells -> deterministic salt factors
-   (ceil(count/target)); build side replicates per salt, probe side salts by
+2. one census of point cells, restricted to covered cells and collected
+   to the driver (grid-sized: at most 32 * 4^res rows) -> deterministic
+   salt factors (ceil(count/target)). Both sides inner-join it under a
+   broadcast, which drops points in uncovered cells and cover cells with
+   no point; the build side replicates per salt, the probe side salts by
    xxhash64(key) % k — deterministic under retry/resume;
-3. equi-join on (cell, salt) — Catalyst picks sort-merge/shuffled-hash;
-   auto-broadcast is disabled for this join (north rule: broadcast-free);
+3. shuffle join on (cell, salt), pinned with a shuffle_hash hint
+   (north rule: the polygon side is never broadcast);
 4. exact refine: cheap bbox predicate (JVM codegen) then vectorized numpy
    ray-casting inside an Arrow batch, with a per-partition parsed-polygon
    cache so each WKT parses once per partition, not once per row.
@@ -129,21 +132,15 @@ def pip_join(
     res: int = 5,
     point_key: str = "point_id",
     rows_per_task: int = 200_000,
-    salted: bool = True,
-    census_sample: float | None = None,
-    cell_prefilter: bool = True,
 ) -> DataFrame:
     """Point-in-polygon join -> (point columns..., poly_id).
 
     points: must carry (point_id, lon, lat). polygons: POLYGONS_SCHEMA.
-    Broadcast-free: the equi-join runs as a shuffle join on (cell[, salt]).
-    ``census_sample``: estimate salt factors from a seeded sample instead of
-    an exact pre-count (the at-scale default — set ~0.01 for a 100 TB scan).
-    ``cell_prefilter``: semi-join the points against the distinct cover
-    cells before the shuffle (guide §3.2) — a large win when polygons cover
-    a minority of cells (the common case), pure fixed overhead when they
-    tile the whole domain (set False there, e.g. an exhaustive admin-region
-    grid; measured ~0.2-0.5 s of overhead with zero pruning).
+    One census of point cells (run eagerly, one Spark job) inner-joins
+    both sides under a broadcast: points in uncovered cells and cover
+    cells with no point drop out, and a cell with more than
+    ``rows_per_task`` points is salted (``rows_per_task`` >= the point
+    count salts nothing). The main join is a shuffle join on (cell, salt).
     """
     # measured (r8): spreading a narrow point source here LOSES (~0.5-0.8 s
     # at sf1.0) — ghcell is cheap codegen and the (cell, salt) join shuffles
@@ -153,43 +150,32 @@ def pip_join(
     cover = polygon_cover_cells(polygons, res).select(
         "cell", "poly_id", "wkt", "bbox"
     )
-
-    # pre-filter the big side before it is shuffled (guide §3.2): points in
-    # cells no polygon covers can never match, so a broadcast semi-join on
-    # the DISTINCT cover cells drops them ahead of the exchange (measured:
-    # 24M -> 10.8M shuffled rows, candidate stage 4.6 -> 2.8 s at sf1.0).
-    # The broadcast is cell ids only — bounded by the res-level grid size,
-    # never by polygon count — so the main spatial join stays broadcast-free
-    # (north rule); degenerate full-coverage polygon sets just make the
-    # filter pass everything, never wrong results.
-    if cell_prefilter:
-        pts = pts.join(
-            F.broadcast(cover.select("cell").distinct()), "cell", "left_semi"
-        )
-
-    if salted:
-        factors = ix.salt_factors(
-            pts, "cell", rows_per_task=rows_per_task, sample_fraction=census_sample
-        ).cache()  # consumed by BOTH sides — without cache the census scan
-        #            of the full point table runs twice (seen in the plan)
-        pts = ix.with_salt(pts, factors, "cell", point_key).drop("salt_k")
-        cover = ix.explode_salts(cover, factors, "cell")
-        join_keys = ["cell", "salt"]
-    else:
-        join_keys = ["cell"]
+    # the census: point counts per covered cell, collected to the driver
+    # as a local relation. It is grid-sized (at most 32 * 4^res rows,
+    # never polygon-sized), so broadcasting it keeps the main spatial
+    # join broadcast-free
+    covered = F.broadcast(cover.select("cell").distinct())
+    census = ix.salt_factors(
+        pts.join(covered, "cell", "left_semi"), "cell", rows_per_task
+    ).toArrow()
+    factors = F.broadcast(
+        pts.sparkSession.createDataFrame(census, "cell long, salt_k int")
+    )
+    pts = ix.with_salt(pts, factors, "cell", point_key).drop("salt_k")
+    cover = ix.explode_salts(cover, factors, "cell")
 
     # north rule: broadcast-free main spatial join. A conf toggle would be
     # restored before the (lazy) plan ever executes, so pin the physical
     # strategy with a join HINT instead — shuffled-hash on the cover side
-    # co-partitions both sides on (cell[, salt]) without replicating either.
-    cand = pts.join(cover.hint("shuffle_hash"), join_keys, "inner")
+    # co-partitions both sides on (cell, salt) without replicating either.
+    cand = pts.join(cover.hint("shuffle_hash"), ["cell", "salt"], "inner")
     # cheap exact-envelope prefilter stays in codegen before Python runs
     cand = cand.where(
         (F.col("lon") >= F.col("bbox.w"))
         & (F.col("lon") <= F.col("bbox.e"))
         & (F.col("lat") >= F.col("bbox.s"))
         & (F.col("lat") <= F.col("bbox.n"))
-    ).drop("bbox", *(["salt"] if salted else []), "cell")
+    ).drop("bbox", "salt", "cell")
     # a polygon may span several cover cells; a point matches in at most
     # one (its own cell) so no dedupe needed — the cell equi-join yields
     # each (point, poly) pair exactly once.

@@ -71,19 +71,104 @@ def test_pip_join_matches_oracle(spark, points_df):
 
 
 def test_pip_join_unsalted_equals_salted(spark, points_df):
-    pts, _ = points_df
+    """Salting never changes results: rows_per_task=300 salts the hot
+    cells, 10**9 gives every cell salt_k = 1 (the unsalted plan); both
+    equal the oracle."""
+    pts, pdf = points_df
     polys = polygons_df(spark, 50)
-    a = {
-        (r.point_id, r.poly_id)
-        for r in pip_join(pts, polys, res=5, salted=True, rows_per_task=300)
-        .select("point_id", "poly_id").collect()
-    }
-    b = {
-        (r.point_id, r.poly_id)
-        for r in pip_join(pts, polys, res=5, salted=False)
-        .select("point_id", "poly_id").collect()
-    }
-    assert a == b
+    expected = _pip_oracle(pdf, polygons_pdf(50))
+    assert len(expected) > 0
+    for rows_per_task in (300, 10**9):
+        got = {
+            (r.point_id, r.poly_id)
+            for r in pip_join(pts, polys, res=5, rows_per_task=rows_per_task)
+            .select("point_id", "poly_id").collect()
+        }
+        assert got == expected, rows_per_task
+
+
+def _ring_pdf(rows) -> pd.DataFrame:
+    """(poly_id, w, s, e, n) boxes -> POLYGONS_SCHEMA rows, the ring on
+    the box and the bbox as given (w > e stays as it is)."""
+    return pd.DataFrame([
+        {
+            "poly_id": pid,
+            "wkt": f"POLYGON (({w} {s}, {e} {s}, {e} {n}, {w} {n}, {w} {s}))",
+            "bbox": {"w": w, "e": e, "s": s, "n": n},
+        }
+        for pid, w, s, e, n in rows
+    ])
+
+
+def test_pip_join_prunes_both_sides_matches_oracle(spark):
+    """Points outside every cover cell and polygons whose cover holds no
+    point both drop out at the census join, and the answer still equals
+    the oracle. The census is a driver-side local relation, never cached:
+    the plan reads no cached table and the session cache stays empty."""
+    from geoharvest_spark.schema import POLYGONS_SCHEMA
+
+    rng = np.random.RandomState(5)
+    n = 600
+    inside = rng.rand(n) < 0.5
+    pdf = pd.DataFrame({
+        "point_id": [f"q{i:04d}" for i in range(n)],
+        # half inside the two populated boxes, half in the far south-west
+        # where no polygon reaches
+        "lon": np.round(np.where(inside, rng.uniform(0, 20, n),
+                                 rng.uniform(-170, -120, n)), 6),
+        "lat": np.round(np.where(inside, rng.uniform(0, 10, n),
+                                 rng.uniform(-80, -50, n)), 6),
+    })
+    polys_pdf = _ring_pdf([
+        ("a", 0.0, 0.0, 12.0, 10.0),
+        ("b", 8.0, 2.0, 20.0, 6.0),
+        ("empty_ne", 100.0, 60.0, 110.0, 70.0),  # its cover holds no point
+        ("empty_nw", -60.0, 40.0, -40.0, 45.0),
+    ])
+    pts = spark.createDataFrame(pdf)
+    polys = spark.createDataFrame(polys_pdf, schema=POLYGONS_SCHEMA)
+    spark.catalog.clearCache()  # other tests' fixtures cache their inputs
+    df = pip_join(pts, polys, res=5, rows_per_task=20)
+    got = {(r.point_id, r.poly_id) for r in df.select("point_id", "poly_id").collect()}
+    expected = _pip_oracle(pdf, polys_pdf)
+    assert got == expected and len(expected) > 100
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "InMemoryTableScan" not in plan
+    assert df.count() == len(expected)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_antimeridian_bbox_raises(spark):
+    """A bbox with w > e must raise, not cover the wrong side of the globe
+    and silently drop every match; a null bbox still covers no cell."""
+    from geoharvest_spark.joins import bbox_overlap_join
+    from geoharvest_spark.schema import POLYGONS_SCHEMA
+
+    pts = spark.createDataFrame(
+        pd.DataFrame({"point_id": [1], "lon": [175.0], "lat": [-15.0]})
+    )
+
+    def polys(rows):
+        pdf = _ring_pdf(rows)
+        pdf["wkt"] = "POLYGON ((170 -20, 180 -20, 180 -10, 170 -10, 170 -20))"
+        return spark.createDataFrame(pdf, schema=POLYGONS_SCHEMA)
+
+    ok = pip_join(pts, polys([("r", 170.0, -20.0, 180.0, -10.0)]))
+    assert [(r.point_id, r.poly_id) for r in ok.collect()] == [(1, "r")]
+    for w, s, e, n in [(170.0, -20.0, -170.0, -10.0), (170.0, -10.0, 180.0, -20.0)]:
+        with pytest.raises(Exception, match="w > e or s > n"):
+            pip_join(pts, polys([("r", w, s, e, n)])).collect()
+    null_bbox = spark.createDataFrame(
+        [("r", "POLYGON ((170 -20, 180 -20, 180 -10, 170 -10, 170 -20))", None)],
+        schema=POLYGONS_SCHEMA,
+    )
+    assert pip_join(pts, null_bbox).count() == 0
+
+    box = "long, w double, e double, s double, n double"
+    a = spark.createDataFrame([(1, 170.0, -170.0, -20.0, -10.0)], "lid " + box)
+    b = spark.createDataFrame([(2, 175.0, 176.0, -16.0, -14.0)], "rid " + box)
+    with pytest.raises(Exception, match="w > e or s > n"):
+        bbox_overlap_join(a, b).collect()
 
 
 def test_pip_main_join_not_broadcast(spark, points_df):

@@ -3,8 +3,8 @@
 North rule: "broadcast-free, salt-partitioned shuffle to defeat hot-cell
 skew". Build a pathological distribution (90% of points in one cell) and
 assert (a) the census assigns salt_k > 1 to the hot cell, (b) the build
-side replicates accordingly, (c) results are identical to the unsalted
-join, (d) the salted shuffle actually splits the hot cell's rows across
+side replicates accordingly, (c) the salted join's results equal an
+oracle, (d) the salted shuffle actually splits the hot cell's rows across
 salt buckets.
 """
 
@@ -72,19 +72,16 @@ def test_salt_distributes_hot_cell(spark, skewed_points):
 
 
 def test_skewed_pip_exact_vs_unsalted(spark, skewed_points):
+    from tests.test_joins import _pip_oracle
+
     polys = spark.createDataFrame(polygons_pdf(150))
     a = {
         (r.point_id, r.poly_id)
-        for r in pip_join(
-            skewed_points, polys, res=5, rows_per_task=1000, salted=True
-        ).select("point_id", "poly_id").collect()
-    }
-    b = {
-        (r.point_id, r.poly_id)
-        for r in pip_join(skewed_points, polys, res=5, salted=False)
+        for r in pip_join(skewed_points, polys, res=5, rows_per_task=1000)
         .select("point_id", "poly_id").collect()
     }
-    assert a == b and len(a) > 0
+    assert a == _pip_oracle(skewed_points.toPandas(), polygons_pdf(150))
+    assert len(a) > 0
 
 
 def test_contract_skew_census_bounds_max_task(spark):
@@ -119,8 +116,9 @@ def test_contract_skew_census_bounds_max_task(spark):
 
 
 def test_contract_skew_join_parity_vs_unsalted(spark):
-    """The contract query's full operator output equals the unsalted run
-    on the same pathological input (salting never changes results)."""
+    """The contract query's full operator output on the pathological input
+    equals the closed-bounds rectangle join (salting never changes
+    results; no point sits on a rect boundary)."""
     import sys
 
     sys.path.insert(0, REPO)
@@ -131,31 +129,16 @@ def test_contract_skew_join_parity_vs_unsalted(spark):
     polys = E._skew_rects_df(spark)
     a = {
         (r.point_id, r.poly_id)
-        for r in pip_join(pts, polys, res=5, rows_per_task=50, salted=True)
+        for r in pip_join(pts, polys, res=5, rows_per_task=50)
         .select("point_id", "poly_id")
         .collect()
     }
-    b = {
-        (r.point_id, r.poly_id)
-        for r in pip_join(pts, polys, res=5, salted=False)
-        .select("point_id", "poly_id")
-        .collect()
+    pdf = pts.toPandas()
+    want = {
+        (pid, rid)
+        for rid, w, s, e, n in E._SKEW_RECTS
+        for pid in pdf.point_id[
+            pdf.lon.between(w, e) & pdf.lat.between(s, n)
+        ]
     }
-    assert a == b and len(a) > 0
-
-
-def test_sampled_census_still_exact(spark, skewed_points):
-    polys = spark.createDataFrame(polygons_pdf(80))
-    exact = {
-        (r.point_id, r.poly_id)
-        for r in pip_join(skewed_points, polys, res=5, salted=False)
-        .select("point_id", "poly_id").collect()
-    }
-    sampled = {
-        (r.point_id, r.poly_id)
-        for r in pip_join(
-            skewed_points, polys, res=5, rows_per_task=1000,
-            salted=True, census_sample=0.1,
-        ).select("point_id", "poly_id").collect()
-    }
-    assert sampled == exact
+    assert a == want and len(a) > 0
